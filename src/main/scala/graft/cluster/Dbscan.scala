@@ -1,5 +1,7 @@
 package graft.cluster
 
+import scala.collection.mutable
+
 import graft.geo.{GeoCell, Haversine}
 
 /** In-memory GEOSCAN clustering for one group of points — the per-key worker
@@ -32,23 +34,31 @@ object Dbscan {
     if (n == 0) return IndexedSeq.empty
 
     val res = GeoCell.resolutionForEpsilon(epsilonMeters)
-    // bucket points by cell; candidate neighbors come from the 1-ring
-    val byCell = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-    points.zipWithIndex.foreach { case ((lat, lng), idx) =>
-      byCell.getOrElseUpdate(GeoCell.cellId(lat, lng, res), scala.collection.mutable.ArrayBuffer.empty) += idx
+    // bucket points by numeric cell key; candidate neighbors come from the
+    // cells of each point's epsilon-disc cover (distinct cells, and every
+    // point sits in one bucket, so each candidate is met once)
+    val byCell = mutable.LongMap.empty[mutable.ArrayBuilder.ofInt]
+    var p = 0
+    while (p < n) {
+      val (lat, lng) = points(p)
+      byCell.getOrElseUpdate(GeoCell.cellKey(lat, lng, res),
+        new mutable.ArrayBuilder.ofInt) += p
+      p += 1
     }
+    val buckets = byCell.mapValuesNow(_.result())
 
-    val neighbors = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    points.zipWithIndex.foreach { case ((lat, lng), idx) =>
-      val seen = scala.collection.mutable.HashSet.empty[Int]
-      GeoCell.coverDisc(lat, lng, epsilonMeters, res).foreach { c =>
-        byCell.get(c).foreach(_.foreach { other =>
-          if (other != idx && seen.add(other)) {
+    val neighbors = Array.tabulate(n) { idx =>
+      val (lat, lng) = points(idx)
+      val found = new mutable.ArrayBuilder.ofInt
+      GeoCell.coverKeys(lat, lng, epsilonMeters, res).foreach { c =>
+        buckets.get(c).foreach(_.foreach { other =>
+          if (other != idx) {
             val (la, ln) = points(other)
-            if (Haversine.meters(lat, lng, la, ln) <= epsilonMeters) neighbors(idx) += other
+            if (Haversine.meters(lat, lng, la, ln) <= epsilonMeters) found += other
           }
         })
       }
+      found.result()
     }
 
     // core = degree >= minPts (degree counts epsilon-neighbors, i.e. graph
@@ -61,7 +71,7 @@ object Dbscan {
     while (i < n) {
       if (core(i) && label(i) < 0) {
         // BFS; component label = min index = first discovered from ascending scan
-        val queue = scala.collection.mutable.Queue(i)
+        val queue = mutable.Queue(i)
         label(i) = i
         while (queue.nonEmpty) {
           val u = queue.dequeue()

@@ -3,12 +3,12 @@ package graft.cluster
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{MLReadable, MLReader, MLWritable, MLWriter}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.geo.{ConvexHull, GeoCell, GeoJson}
+import graft.geo.{ConvexHull, GeoCell, GeoJson, Haversine}
 import graft.functions.GeoFunctions
 
 /** Shared parameter surface of the GEOSCAN estimators — exact API parity
@@ -84,22 +84,32 @@ private[cluster] object GeoscanIO {
 /** Density-based geospatial clustering, distributed variant — GEOSCAN
   * steps 1-3 (`01_geofraud_clustering.py:16-32`):
   *
-  *  1. '''Grouping''' — each point is exploded to the grid cells covering its
-  *     epsilon-disc (resolution chosen so the disc spans ≤1 ring); points
-  *     sharing a cell are candidate pairs; haversine ≤ epsilon keeps true
-  *     edges. The cell equi-join is the only shuffle, hash-partitioned by
-  *     cell id — the "ignore 99.99% of the dataset" trick.
-  *  2. '''Clustering''' — vertices with degree < minPts dropped; clusters =
-  *     distributed connected components over the core subgraph
-  *     ([[ConnectedComponents]]: hook + pointer-jump, O(log n) rounds —
-  *     labels are the min vertex id per component, deterministic).
+  *  1. '''Grouping + degree filter''' — each point is sent to every grid
+  *     cell of its epsilon-disc cover (resolution chosen so the disc spans
+  *     ≤1 ring), keyed by the numeric cell key. A cell's group then holds
+  *     every epsilon-neighbor of the points whose own cell it is — the
+  *     "ignore 99.99% of the dataset" trick — so each such point's degree
+  *     is counted inside its own group, with no edge set and no global
+  *     aggregate. Points of degree < minPts are dropped.
+  *  2. '''Clustering''' — the core points are grouped the same way. Each
+  *     group union-finds its own points' edges to larger pids and emits a
+  *     spanning forest plus one self-pair per own point;
+  *     [[ConnectedComponents]] (hook + pointer-jump, O(log n) rounds)
+  *     joins the per-cell forests. Labels are the min pid per component,
+  *     deterministic.
   *  3. '''Hulls''' — per-component convex hull (monotone chain) of core
   *     points; model state = (cluster, hull polygon).
   *
-  * Scale notes: input is never collected; the candidate-pair join carries a
-  * ~9× cell fanout on the build side only; AQE skew handling + optional
-  * `sampleMaxPerCell` guard dense cells; CC runs O(log n) bounded rounds
-  * over the (much smaller) core-edge set regardless of graph diameter.
+  * An edge is a pair at haversine ≤ epsilon whose larger-pid point lies in
+  * a cell of the smaller-pid point's cover.
+  *
+  * Scale notes: input is never collected. Each pass is one shuffle of
+  * (2k+1)² rows per point, hash-partitioned by cell key (k = 1 unless the
+  * data reaches the poles or epsilon exceeds the coarsest cell). Memory per
+  * group is one cell's (2k+1)² neighbourhood; `sampleMaxPerCell` bounds it
+  * on dense cells. Connected components see a forest of at most
+  * (2k+1)² + 1 rows per core point, not the epsilon-edge set, and run
+  * O(log n) bounded rounds over it regardless of graph diameter.
   */
 class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with GeoscanParams {
   def this() = this(org.apache.spark.ml.util.Identifiable.randomUID("geoscan"))
@@ -125,16 +135,16 @@ class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with Geo
     // different pids to branches that already consumed the old ones —
     // silent cross-wiring of edges. Checkpointing materializes the ids;
     // losing a checkpoint partition fails loudly instead.
+    //
+    // The same job observes the max |lat| that picks the finest resolution
+    // whose 1-ring still covers epsilon — a fixed conservative latitude
+    // would coarsen cells ~2× and quadruple candidate pairs (SURVEY §3.1
+    // shuffle note). Empty / all-null input → empty model.
+    val latRange = Observation()
     val pts = sampled.withColumn("pid", monotonically_increasing_id())
+      .observe(latRange, max(abs($"lat")).as("maxAbsLat"))
       .localCheckpoint(true)
-
-    // pick the finest resolution whose 1-ring still covers epsilon at the
-    // data's actual max |lat| — a fixed conservative latitude would coarsen
-    // cells ~2× and quadruple candidate pairs (SURVEY §3.1 shuffle note).
-    // Computed over the checkpointed points (no second input scan; the
-    // per-cell cap moves max |lat| by < one ~30 m cell, irrelevant to the
-    // resolution pick). Empty / all-null input → empty model.
-    val maxAbsLatOpt = pts.agg(max(abs($"lat"))).as[Option[Double]].head()
+    val maxAbsLatOpt = Option(latRange.get("maxAbsLat")).map(_.asInstanceOf[Double])
     if (maxAbsLatOpt.isEmpty) {
       pts.unpersist() // the eager checkpoint is already pinned on this path
       val empty = spark.emptyDataset[(Long, Seq[(Double, Double)])]
@@ -142,43 +152,42 @@ class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with Geo
       return copyValues(new GeoscanModel(uid, empty)).setParent(this)
     }
     val res = GeoCell.resolutionForEpsilon(eps, math.min(maxAbsLatOpt.get, 89.0))
+    // every point is grouped under the widest cover in the data (the ring
+    // count is non-decreasing in |lat|), so the group of a point's own cell
+    // holds every point it can share an edge with
+    val rings = GeoCell.coverRings(maxAbsLatOpt.get, eps, res)
+    val mp = $(minPts)
 
-    // step 1: epsilon-disc cover explode (build side only) + cell equi-join.
-    // No distinct needed: the probe side carries each point's OWN cell
-    // (exactly one row per point), so a pair (l, r) joins at most once —
-    // via the one build row where l's cover includes r's cell. The cover
-    // guarantee (GeoCoreSpec "epsilon-neighbors share a cell") makes that
-    // row exist whenever haversine ≤ eps. Saves a full edge-set shuffle.
-    val probe = pts.select($"pid".as("pid_r"), $"lat".as("lat_r"), $"lng".as("lng_r"),
-      GeoFunctions.geoCell($"lat", $"lng", res).as("cell"))
-    val build = pts.select($"pid".as("pid_l"), $"lat".as("lat_l"), $"lng".as("lng_l"),
-      explode(GeoFunctions.coverDisc($"lat", $"lng", eps, res)).as("cell"))
-    val edges = build.join(probe, "cell")
-      .where($"pid_l" < $"pid_r" &&
-        GeoFunctions.haversineMeters($"lat_l", $"lng_l", $"lat_r", $"lng_r") <= eps)
-      .select($"pid_l", $"pid_r")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // a point without coordinates has no cell and no neighbor: noise, also
+    // under minPts = 0
+    val located = pts.where($"lat".isNotNull && $"lng".isNotNull)
+      .select($"pid", $"lat", $"lng").as[(Long, Double, Double)]
+    // one row per (cover cell, point), sorted by cell within each task. A
+    // fixed partition count: the rows are few but the per-cell work is not,
+    // and coalescing them into one task would serialize it
+    val parts = spark.sparkContext.defaultParallelism
+    def byCell(points: Dataset[(Long, Double, Double)]): Dataset[Geoscan.CoverRow] =
+      points.flatMap { case (pid, lat, lng) =>
+        val home = GeoCell.cellKey(lat, lng, res)
+        GeoCell.ringKeys(home, rings).iterator.map(c => (c, pid, lat, lng, home))
+      }.repartition(parts, $"_1").sortWithinPartitions($"_1")
 
-    // step 2: degree filter (01_geofraud_clustering.py:28) + connected
-    // components. minPts = 0 means every point is core — including isolated
-    // points that appear in no edge (Dbscan/personalized parity).
-    val degrees = edges.select($"pid_l".as("pid")).unionAll(edges.select($"pid_r".as("pid")))
-      .groupBy($"pid").agg(count(lit(1)).as("deg"))
+    // step 1: degree filter (01_geofraud_clustering.py:28). minPts = 0
+    // means every point is core, including points with no neighbor
+    // (Dbscan/personalized parity).
     val core =
-      if ($(minPts) == 0) pts.select($"pid")
-      else degrees.filter($"deg" >= $(minPts)).select($"pid")
-    val coreEdges = edges
-      .join(core.withColumnRenamed("pid", "pid_l"), "pid_l")
-      .join(core.withColumnRenamed("pid", "pid_r"), "pid_r")
+      if (mp == 0) located
+      else byCell(located).mapPartitions(rows =>
+        Geoscan.cellGroups(rows, eps, res).flatMap(_.corePoints(mp)))
 
-    val connected = ConnectedComponents.run(
-      coreEdges.select($"pid_l".as("src"), $"pid_r".as("dst")))
+    // step 2: per-cell spanning forests, joined by connected components. A
+    // core point with no core neighbor keeps only its self-pair: its own
+    // single-point cluster (the reference drops only the low-degree
+    // vertices, 01_geofraud_clustering.py:28)
+    val forest = byCell(core).mapPartitions(rows =>
+      Geoscan.cellGroups(rows, eps, res).flatMap(_.spanningForest()))
+    val components = ConnectedComponents.run(forest.toDF("src", "dst"))
       .toDF("pid", "component")
-    // a core point whose neighbors are all non-core keeps no core edge:
-    // it is its own single-point cluster (reference drops only the
-    // low-degree vertices, 01_geofraud_clustering.py:28)
-    val components = connected.unionAll(
-      core.join(connected, Seq("pid"), "left_anti").select($"pid", $"pid".as("component")))
 
     // step 3: hulls per component over core points — two-level so a giant
     // component never collects all its points into one task:
@@ -212,7 +221,7 @@ class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with Geo
       .toDF("cluster", "hull")
       .persist(StorageLevel.MEMORY_AND_DISK)
     state.count() // materialize before unpersisting inputs
-    pts.unpersist(); edges.unpersist()
+    pts.unpersist()
 
     val model = new GeoscanModel(uid, state)
     copyValues(model).setParent(this)
@@ -220,6 +229,95 @@ class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with Geo
 }
 
 object Geoscan {
+
+  /** A point under one cell of its cover: (cell, pid, lat, lng, own cell). */
+  private[cluster] type CoverRow = (Long, Long, Double, Double, Long)
+
+  /** Cover rows sorted by cell → one [[CellGroup]] per cell, built one at a
+    * time, so a task holds a single group in memory. */
+  private[cluster] def cellGroups(rows: Iterator[CoverRow], eps: Double, res: Int)
+      : Iterator[CellGroup] = {
+    val it = rows.buffered
+    new Iterator[CellGroup] {
+      def hasNext: Boolean = it.hasNext
+      def next(): CellGroup = {
+        val cell = it.head._1
+        val members = Array.newBuilder[CoverRow]
+        while (it.hasNext && it.head._1 == cell) members += it.next()
+        new CellGroup(cell, members.result(), eps, res)
+      }
+    }
+  }
+
+  /** One cell's group in [[Geoscan.fit]]: the rows (cell, pid, lat, lng,
+    * own cell) of every point whose cover includes `cell`. The points whose
+    * own cell it is are the group's own points; the group holds all of
+    * their epsilon-neighbors. */
+  private[cluster] final class CellGroup(
+      cell: Long, members: Array[CoverRow], eps: Double, res: Int) {
+    private val n = members.length
+    private val pid = members.map(_._2)
+    private val lat = members.map(_._3)
+    private val lng = members.map(_._4)
+    private val home = members.map(_._5)
+    private val cosLat = lat.map(l => math.cos(math.toRadians(l)))
+    private val rings = lat.map(GeoCell.coverRings(_, eps, res))
+    // the distance is at least R·|Δlat| (radians): pairs whose latitudes
+    // alone are farther apart than this (eps plus a rounding margin) are
+    // no edge, and skip the trigonometry
+    private val maxDLat = math.toDegrees(eps * (1 + 1e-9) / GeoCell.EarthRadiusMeters)
+    private val own = (0 until n).filter(home(_) == cell)
+
+    /** Members `m` and `q` share an edge: haversine ≤ eps, and the
+      * larger pid's cell lies in the smaller pid's cover. */
+    private def edge(m: Int, q: Int): Boolean =
+      if (pid(m) < pid(q)) linked(m, q) else linked(q, m)
+
+    private def linked(a: Int, b: Int): Boolean =
+      math.abs(lat(b) - lat(a)) <= maxDLat &&
+        GeoCell.withinRing(home(a), home(b), rings(a)) &&
+        Haversine.meters(lat(a), lng(a), cosLat(a), lat(b), lng(b), cosLat(b)) <= eps
+
+    /** Own points with at least `minPts` epsilon-neighbors, as
+      * (pid, lat, lng). Counting stops at `minPts`. */
+    def corePoints(minPts: Int): Iterator[(Long, Double, Double)] =
+      own.iterator.filter { m =>
+        var deg = 0
+        var q = 0
+        while (q < n && deg < minPts) {
+          if (q != m && edge(m, q)) deg += 1
+          q += 1
+        }
+        deg >= minPts
+      }.map(m => (pid(m), lat(m), lng(m)))
+
+    /** Union-find over the edges from each own point to larger pids, as
+      * (member, root) per member joined to another, plus a self-pair per
+      * own point so that an isolated one still has a component. A pair
+      * already joined skips its haversine. */
+    def spanningForest(): Iterator[(Long, Long)] = {
+      val parent = Array.range(0, n)
+      def find(x0: Int): Int = {
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      own.foreach { m =>
+        var q = 0
+        while (q < n) {
+          if (pid(q) > pid(m)) {
+            val rm = find(m)
+            val rq = find(q)
+            if (rm != rq && edge(m, q)) parent(math.max(rm, rq)) = math.min(rm, rq)
+          }
+          q += 1
+        }
+      }
+      own.iterator.map(m => (pid(m), pid(m))) ++
+        (0 until n).iterator.filter(q => find(q) != q).map(q => (pid(q), pid(find(q))))
+    }
+  }
+
   /** Deterministic per-cell cap: rank points inside each ~30 m (res 11) cell
     * by a stable key and keep the first `max` — the reference's sampling UDF
     * (`01_geofraud_clustering.py:178-191`) without the nondeterminism. */

@@ -68,11 +68,6 @@ object GeoFunctions {
     * expansion) as an array column. UDF (array-returning, off hot path). */
   def cellRing(cell: Column, k: Int): Column = ringUdf(cell, lit(k))
 
-  /** Cells covering the epsilon-disc around a point (GEOSCAN grouping,
-    * `01_geofraud_clustering.py:20`). */
-  def coverDisc(lat: Column, lng: Column, epsilonMeters: Double, res: Int): Column =
-    coverDiscUdf(lat, lng, lit(epsilonMeters), lit(res))
-
   private val ringUdf = udf((cell: String, k: Int) => GeoCell.ring(cell, k))
 
   private val coverDiscUdf = udf((lat: Double, lng: Double, eps: Double, res: Int) =>

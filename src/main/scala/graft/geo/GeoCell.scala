@@ -19,6 +19,11 @@ package graft.geo
   * `"%X%07X%07X".format(res, i, j)`. The encoding is deliberately simple
   * enough to reproduce in ANSI SQL (`printf('%X%07X%07X', …)`) so every cell
   * operator has an exact DuckDB oracle.
+  *
+  * The same 60 bits as a `Long` are the numeric cell key ([[cellKey]]): the
+  * resolution in bits 56-59, the row index in bits 28-55, the column index
+  * in bits 0-27, so `idOf(key)` is the id's 15 hex digits. The cover and
+  * ring math works on keys; the string operators are spelled through it.
   */
 object GeoCell {
 
@@ -55,12 +60,39 @@ object GeoCell {
     ((j % cols) + cols) % cols
   }
 
+  /** Numeric key of cell (`res`, `i`, `j`); see the object doc. */
+  private def key(res: Int, i: Long, j: Long): Long = (res.toLong << 56) | (i << 28) | j
+
+  private val IndexMask = (1L << 28) - 1
+  private def keyRes(key: Long): Int = (key >>> 56).toInt
+  private def keyRow(key: Long): Long = (key >>> 28) & IndexMask
+  private def keyCol(key: Long): Long = key & IndexMask
+
+  /** Point → numeric cell key (the id of [[cellId]] as a `Long`). */
+  def cellKey(lat: Double, lng: Double, res: Int): Long = {
+    checkRes(res)
+    key(res, latIndex(lat, res), lngIndex(lng, res))
+  }
+
+  private val HexDigits = "0123456789ABCDEF".toCharArray
+
+  /** Key → 15-digit uppercase-hex id: fixed-width, equal to
+    * `"%X%07X%07X".format(res, i, j)` without the formatter. */
+  def idOf(key: Long): String = {
+    val out = new Array[Char](15)
+    var k = key
+    var p = 14
+    while (p >= 0) {
+      out(p) = HexDigits((k & 0xF).toInt)
+      k >>>= 4
+      p -= 1
+    }
+    new String(out)
+  }
+
   /** Point → uppercase-hex cell id. The system's hottest function (reference
     * `to_h3`, `utils/spark_utils.py:6-9`). */
-  def cellId(lat: Double, lng: Double, res: Int): String = {
-    checkRes(res)
-    f"$res%X${latIndex(lat, res)}%07X${lngIndex(lng, res)}%07X"
-  }
+  def cellId(lat: Double, lng: Double, res: Int): String = idOf(cellKey(lat, lng, res))
 
   /** Parse a cell id back into (res, i, j). */
   def parse(id: String): (Int, Long, Long) = {
@@ -71,7 +103,7 @@ object GeoCell {
     (res, i, j)
   }
 
-  private def encode(res: Int, i: Long, j: Long): String = f"$res%X$i%07X$j%07X"
+  private def encode(res: Int, i: Long, j: Long): String = idOf(key(res, i, j))
 
   /** Center of a cell as (lat, lng). */
   def center(id: String): (Double, Double) = {
@@ -85,22 +117,51 @@ object GeoCell {
     * (`01_geofraud_clustering.py:360-364`). Longitude wraps; latitude clips
     * at the poles. */
   def ring(id: String, k: Int): Seq[String] = {
-    require(k >= 0, s"negative ring $k")
     val (res, i, j) = parse(id)
-    val rows = 1L << (res + 8)
-    val cols = 1L << (res + 9)
-    for {
-      di <- -k to k
-      ii = i + di
-      if ii >= 0 && ii < rows
-      dj <- -k to k
-    } yield encode(res, ii, (((j + dj) % cols) + cols) % cols)
+    ringKeys(key(res, i, j), k).toSeq.map(idOf)
   }
 
-  /** Cells covering an epsilon-disc around a point: the cell plus enough
-    * rings that any point within `epsilonMeters` shares ≥1 cell — the
-    * GEOSCAN grouping guarantee (`01_geofraud_clustering.py:20`). */
-  def coverDisc(lat: Double, lng: Double, epsilonMeters: Double, res: Int): Seq[String] = {
+  /** [[ring]] on numeric keys, row-major from the south-west corner. Each
+    * cell appears once: a ring wider than the globe's column count wraps
+    * onto every column exactly once. */
+  def ringKeys(center: Long, k: Int): Array[Long] = {
+    require(k >= 0, s"negative ring $k")
+    val res = keyRes(center)
+    val i = keyRow(center)
+    val j = keyCol(center)
+    val rows = 1L << (res + 8)
+    val cols = 1L << (res + 9)
+    val i0 = math.max(i - k, 0L)
+    val i1 = math.min(i + k, rows - 1)
+    val span = math.min(2L * k + 1, cols).toInt
+    // no rows when a parsed id's row lies past its resolution's last one
+    val out = new Array[Long](math.max(i1 - i0 + 1, 0L).toInt * span)
+    var n = 0
+    var ii = i0
+    while (ii <= i1) {
+      var d = 0
+      while (d < span) {
+        out(n) = key(res, ii, (((j - k + d) % cols) + cols) % cols)
+        n += 1
+        d += 1
+      }
+      ii += 1
+    }
+    out
+  }
+
+  /** True iff cell `b` lies in `ringKeys(a, k)` (both at one resolution):
+    * rows at most `k` apart, columns at most `k` apart around the globe. */
+  def withinRing(a: Long, b: Long, k: Int): Boolean = {
+    val cols = 1L << (keyRes(a) + 9)
+    val dj = (((keyCol(b) - keyCol(a)) % cols) + cols) % cols
+    math.abs(keyRow(b) - keyRow(a)) <= k && (dj <= k || cols - dj <= k)
+  }
+
+  /** Ring count of the epsilon-disc cover at `lat`: enough rings that any
+    * point within `epsilonMeters` shares ≥1 cell — the GEOSCAN grouping
+    * guarantee (`01_geofraud_clustering.py:20`). Non-decreasing in |lat|. */
+  def coverRings(lat: Double, epsilonMeters: Double, res: Int): Int = {
     val latMeters = stepMetersLat(res)
     // TRUE cos up to |lat| = 89.9° (the old 0.01 floor silently broke the
     // coverage guarantee above ~89.43°: cells narrower than assumed, two
@@ -109,11 +170,19 @@ object GeoCell {
     // degrades BY DESIGN (documented), not silently at 89.5°.
     val lngMeters = latMeters *
       math.cos(math.toRadians(math.min(math.abs(lat), 89.9)))
-    val k = math.max(
+    math.max(
       math.ceil(epsilonMeters / latMeters),
       math.ceil(epsilonMeters / lngMeters)).toInt
-    ring(cellId(lat, lng, res), k)
   }
+
+  /** Keys of the cells covering an epsilon-disc around a point: the point's
+    * cell ringed by [[coverRings]]. The single source of the cover. */
+  def coverKeys(lat: Double, lng: Double, epsilonMeters: Double, res: Int): Array[Long] =
+    ringKeys(cellKey(lat, lng, res), coverRings(lat, epsilonMeters, res))
+
+  /** [[coverKeys]] as cell ids. */
+  def coverDisc(lat: Double, lng: Double, epsilonMeters: Double, res: Int): Seq[String] =
+    coverKeys(lat, lng, epsilonMeters, res).toSeq.map(idOf)
 
   /** Coarsest resolution whose cell edge (in the shorter, longitude
     * direction at `maxAbsLat`) still exceeds `epsilonMeters`, so that a

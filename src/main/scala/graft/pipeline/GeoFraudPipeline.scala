@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.cluster.{GeoscanPersonalized, GeoscanPersonalizedModel}
 import graft.functions.GeoFunctions
@@ -30,7 +31,13 @@ object GeoFraudPipeline {
   /** The TF-IDF personalization scoring over tiles
     * (`01_geofraud_clustering.py:386-418`): df = distinct visitors per tile,
     * tf = a user's visits to their own tile, tf_idf = tf·ln(N/df). */
-  def tfidfTiles(tiles: DataFrame, pointsH3: DataFrame): DataFrame = {
+  def tfidfTiles(tiles: DataFrame, pointsH3: DataFrame): DataFrame =
+    tfidfTiles(tiles, pointsH3, StorageLevel.MEMORY_AND_DISK)._1
+
+  /** [[tfidfTiles]] with the docFreq cache handed back: (tiles, docFreq).
+    * The caller unpersists docFreq once it has consumed the tiles. */
+  private def tfidfTiles(tiles: DataFrame, pointsH3: DataFrame,
+                         docFreqLevel: StorageLevel): (DataFrame, DataFrame) = {
     // distinct BEFORE the join: the reference joins the full multi-row tile
     // frame (`01_geofraud_clustering.py:389-392`) and distincts after — same
     // result, but per-cell fanout tiles×points blows up at scale (measured
@@ -44,7 +51,7 @@ object GeoFraudPipeline {
       .join(pointsH3, Seq("h3"))
       .select("user", "h3").distinct()
       .groupBy("h3").agg(sum(lit(1)).as("df"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(docFreqLevel)
     val termFreq = tiles
       .join(pointsH3, Seq("h3", "user"))
       .groupBy("user", "h3", "cluster").agg(sum(lit(1)).as("tf"))
@@ -55,9 +62,10 @@ object GeoFraudPipeline {
     // whose range sampling re-executes the child — measured 7s slower at
     // sf0.1 with the fused spelling here.
     val n = docFreq.count()
-    termFreq.join(docFreq, Seq("h3"))
+    val scored = termFreq.join(docFreq, Seq("h3"))
       .withColumn("tf_idf", col("tf") * log(lit(n.toDouble) / col("df")))
       .select("user", "cluster", "h3", "tf_idf")
+    (scored, docFreq)
   }
 
   /** Serving leg of notebook 02 (`02_geofraud_fraud.py:109-196`): train one
@@ -110,16 +118,18 @@ object GeoFraudPipeline {
 
     tilesOut match {
       case Some(path) =>
-        // scoped persist: TF-IDF reads the tile cover three times (docFreq,
+        // scoped persists: TF-IDF reads the tile cover three times (docFreq,
         // termFreq, N) and the Z-order write's range sampling adds a fourth
-        // pass; released as soon as the table is written
+        // pass; the cover and TF-IDF's docFreq are released as soon as the
+        // table is written
         val rawTiles = model.getTiles(tilePrecision, tileLayers, gridN)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val tiles = tfidfTiles(rawTiles, pointsH3)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val (tiles, docFreq) = tfidfTiles(rawTiles, pointsH3, StorageLevel.MEMORY_AND_DISK)
         tiles.repartitionByRange(col("user"), col("h3"))
           .sortWithinPartitions("user", "h3")
           .write.mode("overwrite").parquet(path)
         rawTiles.unpersist()
+        docFreq.unpersist()
         // production shape: the anomaly job reads the persisted tiles table
         // (`02_geofraud_fraud.py:18`), not the fit lineage
         val tilesBack = spark.read.parquet(path)

@@ -1,6 +1,8 @@
 package graft.cluster
 
 import graft.SparkSpec
+import graft.geo.ConvexHull
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -30,23 +32,92 @@ class GeoscanSpec extends SparkSpec {
     assert(out.filter($"latitude" === 40.725).select("cluster").head.isNullAt(0))
   }
 
+  /** The fitted state built on the driver from [[Dbscan.cluster]]: per
+    * component, its min pid and the hull of its core points. Pids are
+    * numbered as fit numbers them: monotonically_increasing_id over the
+    * same projection, after the same per-cell cap. Points without
+    * coordinates are noise. */
+  private def driverState(df: DataFrame, eps: Double, minPts: Int, cap: Int = 0)
+      : Seq[(Long, Seq[(Double, Double)])] = {
+    import spark.implicits._
+    val raw = df.select($"latitude".cast("double").as("lat"),
+      $"longitude".cast("double").as("lng"))
+    val sampled = if (cap > 0) Geoscan.capPerCell(raw, cap) else raw
+    val pts = sampled.withColumn("pid", monotonically_increasing_id())
+      .as[(Option[Double], Option[Double], Long)].collect()
+      .collect { case (Some(lat), Some(lng), pid) => (lat, lng, pid) }
+    val labels = Dbscan.cluster(pts.map(p => (p._1, p._2)).toIndexedSeq, eps, minPts)
+    pts.zip(labels).collect { case (p, Some(label)) => (label, p) }
+      .groupBy(_._1).values
+      .map(grp => (grp.map(_._2._3).min, ConvexHull.hull(grp.map(g => (g._2._1, g._2._2)).toSeq)))
+      .toSeq.sortBy(_._1)
+  }
+
+  /** Fits the distributed model and asserts its exact (cluster, hull) state
+    * against [[driverState]]; returns that state. */
+  private def assertExactState(df: DataFrame, eps: Double, minPts: Int, cap: Int = 0)
+      : Seq[(Long, Seq[(Double, Double)])] = {
+    import spark.implicits._
+    val model = new Geoscan().setEpsilon(eps).setMinPts(minPts).setSampleMaxPerCell(cap).fit(df)
+    val fitted = model.state.as[(Long, Seq[(Double, Double)])].collect().toSeq.sortBy(_._1)
+    val expected = driverState(df, eps, minPts, cap)
+    assert(fitted == expected, s"eps=$eps minPts=$minPts cap=$cap")
+    expected
+  }
+
   test("distributed clustering matches in-memory DBSCAN partitions (property)") {
     import spark.implicits._
     val r = new Random(5)
+    // random clouds, each with duplicated points
     (1 to 3).foreach { _ =>
-      val pts = IndexedSeq.fill(120)(
+      val cloud = IndexedSeq.fill(120)(
         (40.70 + r.nextDouble() * 0.006, -74.00 + r.nextDouble() * 0.006))
-      val eps = 80.0
-      val minPts = 3
-      val expected = Dbscan.cluster(pts, eps, minPts)
-
-      val model = new Geoscan().setEpsilon(eps).setMinPts(minPts)
-        .fit(pts.toDF("latitude", "longitude"))
-      // recover per-point labels by re-running the edge logic: compare via
-      // cluster count + core count (labels are opaque)
-      val nClustersExpected = expected.flatten.distinct.length
-      assert(model.state.count() == nClustersExpected)
+      val pts = cloud ++ IndexedSeq.fill(20)(cloud(r.nextInt(cloud.length)))
+      assert(assertExactState(pts.toDF("latitude", "longitude"), 80.0, 3).nonEmpty)
     }
+
+    // minPts = 0: isolated points are single-point clusters; points without
+    // coordinates are noise
+    val sparse = (twoBlobs ++ Seq((40.80, -73.90), (40.60, -74.10)))
+      .map { case (la, ln) => (Option(la), Option(ln)) } ++
+      Seq((None, Some(-74.0)), (Some(40.7), None), (None, None))
+    val zero = assertExactState(sparse.toDF("latitude", "longitude"), 50.0, 0)
+    assert(zero.count(_._2.length == 1) >= 2)
+
+    // one component of 1500 points in one partition: every per-partition
+    // hull buffer collapses past 256 points
+    val big = Seq.fill(1500)((40.72 + r.nextDouble() * 0.001, -73.99 + r.nextDouble() * 0.001))
+    val bigDf = spark.sparkContext.parallelize(big, 1).toDF("latitude", "longitude")
+    assert(assertExactState(bigDf, 30.0, 3).length == 1)
+
+    // points on cell borders: exact row/column edges of the fit's grid and
+    // their nearest doubles on either side
+    val eps = 60.0
+    val res = graft.geo.GeoCell.resolutionForEpsilon(eps, 40.8)
+    val step = graft.geo.GeoCell.stepDegrees(res)
+    val (i0, j0) = (math.floor((40.73 + 90) / step), math.floor((-73.98 + 180) / step))
+    val border = for {
+      di <- 0 to 3
+      dj <- 0 to 3
+      f <- Seq(0.0, 0.37, 0.71)
+      (la, ln) <- Seq(((i0 + di) * step - 90, (j0 + dj + f) * step - 180),
+        ((i0 + di + f) * step - 90, (j0 + dj) * step - 180))
+      nudge <- Seq(0, -1, 1)
+    } yield (la + nudge * math.ulp(la), ln - nudge * math.ulp(ln))
+    assert(assertExactState(border.toDF("latitude", "longitude"), eps, 4).nonEmpty)
+
+    // one component spanning many cells: a zigzag chain ~3 km long
+    val chain = (0 until 120).map { k =>
+      (40.75 + k * 2.2e-4, -73.97 + (if (k % 2 == 0) 0.0 else 3e-4))
+    }
+    val chainRes = graft.geo.GeoCell.resolutionForEpsilon(40.0, 40.78)
+    assert(chain.map { case (la, ln) => graft.geo.GeoCell.cellId(la, ln, chainRes) }
+      .distinct.length >= 20)
+    assert(assertExactState(chain.toDF("latitude", "longitude"), 40.0, 2).length == 1)
+
+    // the per-cell cap: the same state as DBSCAN over the capped points
+    val dense = Seq.tabulate(400)(k => (40.701 + (k % 20) * 2e-5, -74.001 + (k / 20) * 2e-5))
+    assert(assertExactState(dense.toDF("latitude", "longitude"), 50.0, 3, cap = 4).nonEmpty)
   }
 
   test("toGeoJson emits an RFC 7946 FeatureCollection") {

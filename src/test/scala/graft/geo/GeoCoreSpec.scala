@@ -34,6 +34,58 @@ class GeoCoreSpec extends AnyFunSuite {
     }
   }
 
+  test("cellId equals String.format(\"%X%07X%07X\") at every resolution, poles and lng ±180 included") {
+    val r = rng
+    val edges = for {
+      lat <- Seq(-90.0, -89.9999999, -45.0, 0.0, 45.0, 89.9999999, 90.0)
+      lng <- Seq(-180.0, -179.9999999, -0.0, 0.0, 179.9999999, 180.0)
+    } yield (lat, lng)
+    val pts = edges ++ Seq.fill(300)((r.nextDouble() * 180 - 90, r.nextDouble() * 360 - 180))
+    (GeoCell.MinResolution to GeoCell.MaxResolution).foreach { res =>
+      pts.foreach { case (lat, lng) =>
+        val want = String.format("%X%07X%07X", Int.box(res),
+          Long.box(GeoCell.latIndex(lat, res)), Long.box(GeoCell.lngIndex(lng, res)))
+        assert(GeoCell.cellId(lat, lng, res) == want, s"($lat, $lng) at res $res")
+        assert(GeoCell.idOf(GeoCell.cellKey(lat, lng, res)) == want)
+      }
+    }
+  }
+
+  test("ringKeys is the ring's cells in order; withinRing is its membership (property)") {
+    val r = rng
+    (1 to 300).foreach { _ =>
+      val res = r.nextInt(16)
+      // half the cells near a pole or the antimeridian, where rows clip
+      // and columns wrap
+      def near(edge: Double) = (if (r.nextBoolean()) 1 else -1) * (edge - r.nextDouble() * 0.01)
+      val lat = if (r.nextBoolean()) r.nextDouble() * 180 - 90 else near(90)
+      val lng = if (r.nextBoolean()) r.nextDouble() * 360 - 180 else near(180)
+      val k = r.nextInt(4)
+      val id = GeoCell.cellId(lat, lng, res)
+      val (_, i, j) = GeoCell.parse(id)
+      val rows = 1L << (res + 8)
+      val cols = 1L << (res + 9)
+      val expected = for {
+        di <- -k to k
+        ii = i + di
+        if ii >= 0 && ii < rows
+        dj <- -k to k
+      } yield String.format("%X%07X%07X", Int.box(res), Long.box(ii),
+        Long.box((((j + dj) % cols) + cols) % cols))
+      assert(GeoCell.ring(id, k) == expected, s"$id k=$k")
+      val center = GeoCell.cellKey(lat, lng, res)
+      val block = GeoCell.ringKeys(center, k + 1)
+      block.foreach { b =>
+        assert(GeoCell.withinRing(center, b, k) == expected.contains(GeoCell.idOf(b)), s"$id k=$k")
+      }
+    }
+    // a parsed id whose row lies past its resolution's last row has no ring
+    assert(GeoCell.ring("0FFFFFFF0000000", 1).isEmpty)
+    // a ring wider than the globe visits every column once
+    val all = GeoCell.ringKeys(GeoCell.cellKey(0.0, 0.0, 0), 300)
+    assert(all.length == all.distinct.length && all.length == 256 * 512)
+  }
+
   test("resolution sizes mirror the reference's H3 res table (~150m res9, ~38m res11)") {
     assert(GeoCell.stepMetersLat(9) > 100 && GeoCell.stepMetersLat(9) < 200)
     assert(GeoCell.stepMetersLat(11) > 25 && GeoCell.stepMetersLat(11) < 50)

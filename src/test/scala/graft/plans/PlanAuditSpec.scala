@@ -30,10 +30,19 @@ class PlanAuditSpec extends SparkSpec {
         "q61_stream_state", "q63_stream_dedup", "q64_stream_join",
         "q20_csv_roundtrip", "q26_table_roundtrip", "q46_jsonl_roundtrip",
         "q60_bucketed_join"))
-    audited.foreach { name =>
-      val p = plan(name)
-      assert(!p.contains("CartesianProduct"), s"$name plans a cartesian:\n$p")
+    // plan every query before judging: one query that fails to plan must
+    // not leave the ones after it unaudited
+    val problems = audited.flatMap { name =>
+      scala.util.Try(plan(name)) match {
+        case scala.util.Success(p) if p.contains("CartesianProduct") =>
+          Some(s"$name plans a cartesian:\n$p")
+        case scala.util.Success(_) => None
+        case scala.util.Failure(e) =>
+          Some(s"$name failed to plan: ${e.getClass.getName}: ${e.getMessage}")
+      }
     }
+    assert(problems.isEmpty,
+      s"${problems.length} of ${audited.length} audited queries:\n${problems.mkString("\n")}")
   }
 
   test("q01 pushes the filter and prunes columns at the parquet scan") {
