@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.geo.{ConvexHull, GeoCell, GeoJson, Haversine}
-import graft.functions.GeoFunctions
+import graft.functions.{GeoFunctions, TileGrid}
 
 /** Shared parameter surface of the GEOSCAN estimators — exact API parity
   * with the reference library wrapper (`01_geofraud_clustering.py:122-132`:
@@ -400,7 +400,7 @@ class GeoscanModel private[cluster] (
     // pre-existing one instead of producing an ambiguous duplicate
     val base = if (in.columns.contains($(predictionCol))) in.drop($(predictionCol)) else in
     base
-      .withColumn(cellCol, tileCellCol(
+      .withColumn(cellCol, TileGrid.cellCol($(tileGrid),
         col($(latitudeCol)).cast(DoubleType), col($(longitudeCol)).cast(DoubleType), prec))
       .join(tilesSide, col(cellCol) === tilesSide(tileH3Col), "left_outer")
       .drop(tileH3Col, cellCol)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DoubleType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.geo.{GeoCell, GeoJson}
-import graft.functions.GeoFunctions
+import graft.functions.TileGrid
 
 /** Per-key GEOSCAN — the reference's `GeoscanPersonalized`
   * (`01_geofraud_clustering.py:270-287`): one model per `groupedCol` value,
@@ -42,6 +42,7 @@ class GeoscanPersonalized(override val uid: String)
         col($(groupedCol)).cast("string").as("user"),
         col($(latitudeCol)).cast(DoubleType).as("lat"),
         col($(longitudeCol)).cast(DoubleType).as("lng"))
+      .where(col("lat").isNotNull && col("lng").isNotNull) // no coordinates: noise
       .as[(String, Double, Double)]
       .groupByKey(_._1)
       .flatMapGroups { (user, it) =>
@@ -149,7 +150,7 @@ class GeoscanPersonalizedModel private[cluster] (
     val in = dataset.toDF()
     val base = if (in.columns.contains($(predictionCol))) in.drop($(predictionCol)) else in
     base
-      .withColumn("__cell", tileCellCol(
+      .withColumn("__cell", TileGrid.cellCol($(tileGrid),
         col($(latitudeCol)).cast(DoubleType), col($(longitudeCol)).cast(DoubleType), prec))
       .join(tilesSide,
         col("__cell") === tilesSide("__tile_h3") &&

@@ -4,6 +4,8 @@ import org.apache.spark.ml.param.{IntParam, Params, ParamValidators}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.TileGrid
+
 /** Tiling knobs shared by both fitted models — the reference's
   * `getTiles(precision, layers)` surface (`01_geofraud_clustering.py:360-364`). */
 private[cluster] trait TileParams extends Params {
@@ -24,43 +26,6 @@ private[cluster] trait TileParams extends Params {
   def setTileLayers(v: Int): this.type = set(tileLayers, v)
   /** Normalizes case and refuses unknown grids eagerly. */
   def setTileGrid(v: String): this.type = set(tileGrid, TileGrid.validate(v))
-
-  /** Point → tile-id column on the configured grid. */
-  protected def tileCellCol(lat: org.apache.spark.sql.Column,
-                            lng: org.apache.spark.sql.Column,
-                            precision: Int): org.apache.spark.sql.Column =
-    if ($(tileGrid) == TileGrid.H3)
-      graft.functions.GeoFunctions.geoToH3(lat, lng, precision)
-    else graft.functions.GeoFunctions.geoCell(lat, lng, precision)
-}
-
-/** Tile GRID dispatch for `getTiles(precision, layers, grid)`: the
-  * engine's own [[graft.geo.GeoCell]] (oracle-replayable, the default) or
-  * REAL H3 ([[graft.geo.H3.polygonCells]]) — the id space the reference's
-  * own tiles tables carry (`01_geofraud_clustering.py:360-364`), so a
-  * fitted model can PRODUCE a table downstream reference consumers join
-  * against directly (q283's shape). */
-private[cluster] object TileGrid {
-  val GeoCell = "geocell"
-  val H3 = "h3"
-
-  /** Normalized grid name; unknown grids refuse EAGERLY (at plan-build
-    * time, not in a task) with both supported names. */
-  def validate(grid: String): String =
-    grid.toLowerCase(java.util.Locale.ROOT) match {
-      case g @ (GeoCell | H3) => g
-      case other => throw new IllegalArgumentException(
-        s"unknown tile grid '$other' — supported: '$GeoCell' (engine " +
-          s"grid, default), '$H3' (real H3 ids)")
-    }
-
-  /** (hull, precision, layers) → cell ids on the (validated) grid. */
-  def cells(grid: String)(hull: Seq[(Double, Double)], precision: Int,
-                          layers: Int): Seq[String] =
-    validate(grid) match {
-      case GeoCell => graft.geo.GeoCell.polygonCells(hull, precision, layers)
-      case _ => graft.geo.H3.polygonCells(hull, precision, layers)
-    }
 }
 
 /** Memoized materialized tile cover per (precision, layers): repeated

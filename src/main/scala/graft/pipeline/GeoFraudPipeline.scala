@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.cluster.{GeoscanPersonalized, GeoscanPersonalizedModel}
-import graft.functions.GeoFunctions
+import graft.functions.TileGrid
 import graft.score.{Anomalies, Blooms}
 
 /** End-to-end wiring of the two reference notebooks (SURVEY §7.1 module 5):
@@ -94,26 +94,17 @@ object GeoFraudPipeline {
           tilePrecision: Int = 10, tileLayers: Int = 5,
           tilesOut: Option[String] = None,
           grid: String = "geocell"): Result = {
+    // tile-id space for the WHOLE run — the cover, the TF-IDF visit
+    // counts and the anomaly join must agree on one grid ("h3" = the
+    // reference's own ids, the golden-replay spelling); refused before the fit
+    val gridN = TileGrid.validate(grid)
 
     val model = new GeoscanPersonalized()
       .setGroupedCol("user").setEpsilon(epsilon).setMinPts(minPts)
       .fit(transactions)
     model.setTilePrecision(tilePrecision).setTileLayers(tileLayers)
 
-    // tile-id space for the WHOLE run — the cover, the TF-IDF visit
-    // counts and the anomaly join must agree on one grid ("h3" = the
-    // reference's own ids, the golden-replay spelling)
-    val gridN = grid.toLowerCase(java.util.Locale.ROOT) match {
-      case "geocell" | "engine" => "geocell"
-      case "h3" => "h3"
-      case other => throw new IllegalArgumentException(
-        s"unknown grid '$other' — supported: 'geocell' (engine, default), 'h3'")
-    }
-    val cellOf =
-      if (gridN == "h3")
-        GeoFunctions.geoToH3(col("latitude"), col("longitude"), tilePrecision)
-      else
-        GeoFunctions.geoCell(col("latitude"), col("longitude"), tilePrecision)
+    val cellOf = TileGrid.cellCol(gridN, col("latitude"), col("longitude"), tilePrecision)
     val pointsH3 = transactions.select(col("user"), cellOf.as("h3"))
 
     tilesOut match {

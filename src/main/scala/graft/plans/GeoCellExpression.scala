@@ -14,14 +14,13 @@ import graft.geo.GeoCell
   * first-class expression with `doGenCode`, so it inlines into whole-stage
   * codegen like a built-in).
   *
-  * Exactly equivalent to [[graft.functions.GeoFunctions.geoCell]] (same
-  * `GeoCell.cellId` math); kept as the SQL-facing registration. */
+  * The one Spark implementation of the engine cell id: built by
+  * [[graft.functions.GeoFunctions.geoCell]], registered as SQL `geo_cell`. */
 case class GeoCellExpression(first: Expression, second: Expression, third: Expression)
   extends TernaryExpression with ImplicitCastInputTypes {
 
   override def prettyName: String = "geo_cell"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = first.nullable || second.nullable || third.nullable
 
   /** ImplicitCastInputTypes (not a bare type check): SQL callers write
     * `geo_cell(40.7, -74.0, 9)` — decimal literals, float columns — and

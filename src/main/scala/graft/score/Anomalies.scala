@@ -3,26 +3,13 @@ package graft.score
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.GeoFunctions
+import graft.functions.TileGrid
 
 /** Batch anomaly extraction — the flagship query (SURVEY §3.3,
   * `02_geofraud_fraud.py:62-68`): transactions against the known-tiles table;
-  * no tile for (user, cell) ⇒ anomalous. */
+  * no tile for (user, cell) ⇒ anomalous. The point's cell is on `grid`
+  * ([[TileGrid]]; the reference uses H3, `02_geofraud_fraud.py:64`). */
 object Anomalies {
-
-  /** Point → tile-id column on the chosen grid: the engine's GeoCell
-    * (default) or REAL H3 (`grid = "h3"`, the reference's own id space —
-    * `02_geofraud_fraud.py:64` computes `to_h3(lat, lng, 10)` before the
-    * join). Unknown grids refuse eagerly with both names. */
-  private def cellCol(grid: String, precision: Int) =
-    grid.toLowerCase(java.util.Locale.ROOT) match {
-      case "geocell" | "engine" =>
-        GeoFunctions.geoCell(col("latitude"), col("longitude"), precision)
-      case "h3" =>
-        GeoFunctions.geoToH3(col("latitude"), col("longitude"), precision)
-      case other => throw new IllegalArgumentException(
-        s"unknown grid '$other' — supported: 'geocell' (engine, default), 'h3'")
-    }
 
   /** The reference's literal spelling: left_outer join + `cluster IS NULL`
     * filter + drop — kept for parity (its plan carries the full right side
@@ -31,7 +18,7 @@ object Anomalies {
                        userCol: String = "user",
                        grid: String = "geocell"): DataFrame = {
     points
-      .withColumn("h3", cellCol(grid, precision))
+      .withColumn("h3", TileGrid.cellCol(grid, col("latitude"), col("longitude"), precision))
       .join(tiles, Seq(userCol, "h3"), "left_outer")
       .filter(col("cluster").isNull)
       .drop("h3", "cluster", "tf_idf")
@@ -50,7 +37,7 @@ object Anomalies {
               userCol: String = "user", grid: String = "geocell",
               keepCell: Boolean = false): DataFrame = {
     val joined = points
-      .withColumn("h3", cellCol(grid, precision))
+      .withColumn("h3", TileGrid.cellCol(grid, col("latitude"), col("longitude"), precision))
       .join(tiles.select(col(userCol), col("h3")), Seq(userCol, "h3"), "left_anti")
     if (keepCell) joined else joined.drop("h3")
   }

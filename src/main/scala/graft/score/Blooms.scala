@@ -1,11 +1,16 @@
 package graft.score
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.lang.ref.WeakReference
 
-import graft.functions.GeoFunctions
+import graft.functions.TileGrid
+import graft.plans.BloomProbe
 
 /** Per-user Bloom-filter reference data — the real-time serving path
   * (`utils/bloom_utils.py:8-42`, `02_geofraud_fraud.py:109-196`): one filter
@@ -57,25 +62,6 @@ object Blooms {
     * broadcast budget. One metadata-light aggregate over the trained frame
     * (sum of filter byte lengths — the exact payload [[toMap]] would
     * collect), not a guess from user counts. */
-  /** Point → tile-id column on the declared grid — the id space the
-    * filters were TRAINED on must be the one probes are computed in
-    * (`grid = "h3"` for blooms over real-H3 tiles, the reference's own
-    * `H3Lookup` shape; the engine's `geocell` by default). A mismatch is
-    * a silent everything-is-anomalous wrong answer, so unknown names
-    * refuse eagerly with both options. */
-  private def cellCol(grid: String, latCol: String, lngCol: String,
-                      precision: Int): org.apache.spark.sql.Column =
-    grid.toLowerCase(java.util.Locale.ROOT) match {
-      case "geocell" | "engine" =>
-        GeoFunctions.geoCell(col(latCol).cast("double"),
-          col(lngCol).cast("double"), precision)
-      case "h3" =>
-        GeoFunctions.geoToH3(col(latCol).cast("double"),
-          col(lngCol).cast("double"), precision)
-      case other => throw new IllegalArgumentException(
-        s"unknown grid '$other' — supported: 'geocell' (engine, default), 'h3'")
-    }
-
   def fitsBroadcast(trained: DataFrame,
                     budgetBytes: Long = DefaultBroadcastBudgetBytes): Boolean = {
     val sz = trained.agg(coalesce(sum(length(col("bloom"))), lit(0L)))
@@ -134,7 +120,7 @@ object Blooms {
     // Sort-merge clusters and sorts each partition by user, so each filter
     // deserializes once per partition.
     val joined = points
-      .withColumn("__cell", cellCol(grid, latCol, lngCol, precision))
+      .withColumn("__cell", TileGrid.cellCol(grid, col(latCol), col(lngCol), precision))
       .join(tr.hint("merge"), col(userCol).cast("string") === col("__bf_user"), "left_outer")
     implicit val enc: Encoder[Row] = Encoders.row(
       StructType(points.schema.fields :+ StructField("anomaly", IntegerType, nullable = false)))
@@ -142,18 +128,18 @@ object Blooms {
       var lastUser: String = null
       var lastBf: BloomFilter = null
       it.map { r =>
-        val anomaly =
-          if (r.isNullAt(nPoint + 2)) 1 // no filter for this user (or null user)
-          else if (r.isNullAt(nPoint)) 1 // null coords map to no tile
+        val cell = r.getString(nPoint) // null coords map to no tile
+        val bf =
+          if (cell == null || r.isNullAt(nPoint + 2)) null // no filter: unknown or null user
           else {
             val user = r.getString(nPoint + 1)
             if (lastBf == null || user != lastUser) {
               lastBf = BloomFilter.readFrom(new ByteArrayInputStream(r.getAs[Array[Byte]](nPoint + 2)))
               lastUser = user
             }
-            if (lastBf.mightContainString(r.getString(nPoint))) 0 else 1
+            lastBf
           }
-        Row.fromSeq(r.toSeq.take(nPoint) :+ anomaly)
+        Row.fromSeq(r.toSeq.take(nPoint) :+ verdict(bf, cell))
       }
     }
   }
@@ -163,37 +149,54 @@ object Blooms {
     * at 100 TB that probes |user×cell| combinations instead of every
     * transaction row (the same broadcast-map probe as [[score]]). */
   def scoreCells(pairs: DataFrame, blooms: Map[String, BloomFilter],
-                 userCol: String = "user", cellCol: String = "h3"): DataFrame = {
-    val bc = pairs.sparkSession.sparkContext.broadcast(blooms)
-    val probe = udf { (user: String, cell: String) =>
-      if (cell == null) 1
-      else bc.value.get(user) match {
-        case Some(bf) => if (bf.mightContainString(cell)) 0 else 1
-        case None => 1
-      }
-    }
-    pairs.withColumn("anomaly", probe(col(userCol).cast("string"), col(cellCol)))
-  }
+                 userCol: String = "user", cellCol: String = "h3"): DataFrame =
+    pairs.withColumn("anomaly", probeCol(pairs, blooms, col(userCol), col(cellCol)))
 
   /** Batch/streaming scorer — the `H3Lookup` pyfunc
     * (`utils/bloom_utils.py:27-42`): df[user, latitude, longitude] →
-    * + `anomaly` 0/1. Broadcasts the filter map; the lookup is O(1) per row,
-    * no join — the serving-path trade the reference makes. Works unchanged
-    * on streaming DataFrames (no shuffle, no state). */
+    * + `anomaly` 0/1. The lookup is the native [[BloomProbe]] expression
+    * over a broadcast of the filter map: O(1) per row, no join — the
+    * serving-path trade the reference makes. Works unchanged on streaming
+    * DataFrames (no shuffle, no state).
+    *
+    * Calls with the same map object on the same running context reuse one
+    * broadcast ([[scoreAuto]] collects a new map per call, so never does).
+    * The one-slot memo holds the last (context, map, broadcast) weakly: it
+    * pins nothing, so Spark's cleaner still drops a broadcast no query
+    * holds, and nothing is destroyed under a query still running. */
   def score(points: DataFrame, blooms: Map[String, BloomFilter], precision: Int = 10,
             userCol: String = "user", latCol: String = "latitude",
-            lngCol: String = "longitude", grid: String = "geocell"): DataFrame = {
-    val spark = points.sparkSession
-    val bc = spark.sparkContext.broadcast(blooms)
-    val probe = udf { (user: String, cell: String) =>
-      if (cell == null) 1 // null coords map to no tile
-      else bc.value.get(user) match {
-        case Some(bf) => if (bf.mightContainString(cell)) 0 else 1
-        case None => 1 // unknown user: everything is anomalous
+            lngCol: String = "longitude", grid: String = "geocell"): DataFrame =
+    points.withColumn("anomaly", probeCol(points, blooms, col(userCol),
+      TileGrid.cellCol(grid, col(latCol), col(lngCol), precision)))
+
+  private var memo: Seq[WeakReference[AnyRef]] = Nil
+
+  /** The [[BloomProbe]] column over the memoized broadcast of `blooms`. */
+  private def probeCol(frame: DataFrame, blooms: Map[String, BloomFilter],
+                       user: Column, cell: Column): Column = {
+    val sc = frame.sparkSession.sparkContext
+    val bc = synchronized {
+      memo.map(_.get) match {
+        case Seq(c, m, b: Broadcast[Map[String, BloomFilter]] @unchecked)
+            if (c eq sc) && (m eq blooms) && !sc.isStopped => b
+        case _ =>
+          val b = sc.broadcast(blooms)
+          memo = Seq(sc, blooms, b).map(new WeakReference[AnyRef](_))
+          b
       }
     }
-    points.withColumn("anomaly",
-      probe(col(userCol).cast("string"),
-        cellCol(grid, latCol, lngCol, precision)))
+    ColumnBridge.column(BloomProbe(ColumnBridge.expression(user.cast("string")),
+      ColumnBridge.expression(cell), bc))
   }
+
+  /** The probe kernel [[BloomProbe]] runs per row, and the rule every
+    * scorer applies: a point without a tile (null coords) or without a
+    * filter (unknown or null user) is anomalous; otherwise a filter miss is. */
+  def probe(blooms: Map[String, BloomFilter], user: UTF8String, cell: UTF8String): Int =
+    if (user == null || cell == null) 1
+    else verdict(blooms.getOrElse(user.toString, null), cell.toString)
+
+  private def verdict(bf: BloomFilter, cell: String): Int =
+    if (bf == null || cell == null || !bf.mightContainString(cell)) 1 else 0
 }

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TileGrid
+
 /** MLflow **pyfunc model directory** export for the bloom scorer — the
   * interop the reference ships its serving model through
   * (`02_geofraud_fraud.py:220-264`: `mlflow.pyfunc.log_model` + a
@@ -37,12 +39,6 @@ import org.apache.spark.sql.functions._
   * when one is on PATH. */
 object PyfuncExport {
 
-  /** Grid names the exported serving twins replay: the engine's own
-    * [[graft.geo.GeoCell]] or REAL H3 (pure-python
-    * [[graft.geo.H3.geoToH3]] twin, generated below). */
-  val GridEngine = "engine"
-  val GridH3 = "h3"
-
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -58,32 +54,27 @@ object PyfuncExport {
     * `(…, h3 string)` cover). `grid` is `"auto"` (sniff engine-first from
     * the first id — unambiguous: a real-H3 id's reserved/res bits never
     * decode as an engine index at the same declared precision, and vice
-    * versa), an explicit `"engine"`/`"geocell"`, or `"h3"`. Every row is
-    * checked against the RESOLVED grid; nulls refuse eagerly on both
-    * lanes (a null key would otherwise reach the python twin as a bogus
-    * `'None'` tile). */
+    * versa) or any [[TileGrid]] name. Every row is checked against the
+    * RESOLVED grid; nulls refuse eagerly on both lanes (a null key would
+    * otherwise reach the python twin as a bogus `'None'` tile). Returns
+    * the grid's [[TileGrid.exportName]]. */
   private def resolveGrid(frame: DataFrame, precision: Int, grid: String,
                           what: String): String = {
     val nullId = frame.where(col("h3").isNull).limit(1).count()
     require(nullId == 0,
       s"$what: the tiles frame carries a NULL tile id — refusing (a null " +
         "key cannot be served; drop or fix those rows first)")
-    val resolved = grid.toLowerCase(java.util.Locale.ROOT) match {
-      case "auto" =>
+    val resolved = TileGrid.validate(grid, auto = true) match {
+      case TileGrid.Auto =>
         frame.select("h3").limit(1).collect().headOption
           .map(_.getString(0)) match {
-          case None => GridEngine // empty cover — trivially engine
-          case Some(id) =>
-            if (engineIdOk(id, precision)) GridEngine else GridH3
+          case Some(id) if !engineIdOk(id, precision) => TileGrid.H3
+          case _ => TileGrid.GeoCell // an empty cover is trivially engine
         }
-      case GridEngine | "geocell" => GridEngine
-      case GridH3 => GridH3
-      case other => throw new IllegalArgumentException(
-        s"$what: unknown grid '$other' — supported: 'auto', " +
-          s"'$GridEngine' (= 'geocell'), '$GridH3'")
+      case g => g
     }
     val offGrid =
-      if (resolved == GridEngine) {
+      if (resolved == TileGrid.GeoCell) {
         val rows = 1L << (precision + 8)
         val colsMax = 1L << (precision + 9)
         frame.where(
@@ -95,17 +86,18 @@ object PyfuncExport {
         val ok = udf((s: String) => graft.geo.H3.isValidCell(s, precision))
         frame.where(!ok(upper(col("h3")))).limit(1).select("h3").collect()
       }
+    val name = TileGrid.exportName(resolved)
     require(offGrid.isEmpty,
-      s"$what serves the ${resolved.toUpperCase(java.util.Locale.ROOT)} " +
+      s"$what serves the ${name.toUpperCase(java.util.Locale.ROOT)} " +
         s"grid at precision $precision — tile id " +
         s"'${offGrid.headOption.map(_.getString(0)).getOrElse("")}' is " +
-        (if (resolved == GridEngine)
+        (if (resolved == TileGrid.GeoCell)
           "not an engine cell at that precision (for real-H3 tile " +
             "tables pass grid=\"h3\")"
         else
           "not a valid H3 cell at that resolution (for engine tile " +
             "tables pass grid=\"engine\")"))
-    resolved
+    name
   }
 
   private def writeText(spark: SparkSession, p: Path, text: String): Unit = {
@@ -128,19 +120,12 @@ object PyfuncExport {
   def exportBloomScorer(spark: SparkSession, trained: DataFrame, dst: String,
                         precision: Int = 10, userCol: String = "user",
                         maxShardBytes: Long = DefaultShardBytes,
-                        grid: String = GridEngine): Unit = {
+                        grid: String = TileGrid.GeoCell): Unit = {
     require(precision >= 0 && precision <= 15, s"precision $precision out of [0,15]")
     require(maxShardBytes > 0, s"maxShardBytes must be positive, got $maxShardBytes")
     // a bloom frame carries no tile ids to sniff — the caller DECLARES
     // the id space the filters were trained on, exactly like precision
-    val gridN = grid.toLowerCase(java.util.Locale.ROOT) match {
-      case GridEngine | "geocell" => GridEngine
-      case GridH3 => GridH3
-      case other => throw new IllegalArgumentException(
-        s"exportBloomScorer: unknown grid '$other' — supported: " +
-          s"'$GridEngine' (= 'geocell'), '$GridH3' (no 'auto': a bloom " +
-          "frame carries no ids to sniff)")
-    }
+    val gridN = TileGrid.exportName(grid)
     val root = new Path(dst)
     val f = fs(spark, root)
     f.delete(root, true)

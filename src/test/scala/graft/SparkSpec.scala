@@ -6,7 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for suites (kept alive across suites — Spark
   * re-creation per suite is slow and getOrCreate returns the same one). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
+  lazy val spark: SparkSession = SparkSpec.session()
+}
+
+object SparkSpec {
+  /** The shared session: the running one, or a new one after a stop. */
+  def session(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Golden-file replay of the full 01→02 reference pipeline on the
   * reference's own dataset (SURVEY §5.4): invariants carry over even though
-  * absolute cell ids differ from Uber H3 (SURVEY §7.3). */
+  * absolute cell ids differ from Uber H3 (SURVEY §7.3). The input-independent
+  * bloom and anomaly laws also run on in-repo data in `graft.score.BloomsSpec`. */
 class PipelineSpec extends SparkSpec {
 
   private val csv = "/root/reference/data/transactions.csv"
@@ -73,92 +74,6 @@ class PipelineSpec extends SparkSpec {
     assert(recovery >= 0.90, s"recovery $recovery") // reference: 78/81 at fpp=0.1
   }
 
-  test("scoreByJoin ≡ broadcast score — bit-identical anomaly flags, no driver collect") {
-    val trained = Blooms.train(result.tiles, fpp = 0.01)
-    val viaMap = Blooms.score(tx, Blooms.toMap(trained), precision = 10)
-      .select("latitude", "longitude", "amount", "user", "anomaly")
-    val viaJoin = Blooms.scoreByJoin(tx, trained, precision = 10)
-      .select("latitude", "longitude", "amount", "user", "anomaly")
-    assert(viaJoin.schema.fieldNames.toSeq == tx.schema.fieldNames.toSeq :+ "anomaly")
-    // same filters, same probe ⇒ strictly equal output (not just FN=0)
-    assert(viaMap.exceptAll(viaJoin).count() == 0 && viaJoin.exceptAll(viaMap).count() == 0)
-  }
-
-  test("scoreByJoin flags unknown/null users and null coords anomalous like the broadcast path") {
-    import spark.implicits._
-    val trained = Blooms.train(result.tiles, fpp = 0.01)
-    val knownUser = result.tiles.select("user").head.getString(0)
-    val probe = Seq(
-      ("stranger", Some(40.72), Some(-73.98)),
-      (null, Some(40.72), Some(-73.98)),
-      (knownUser, Option.empty[Double], Some(-73.98))) // null coords, known user
-      .toDF("user", "latitude", "longitude")
-    val joinOut = Blooms.scoreByJoin(probe, trained).select("anomaly").collect()
-    assert(joinOut.forall(_.getInt(0) == 1))
-    val mapOut = Blooms.score(probe, Blooms.toMap(trained)).select("anomaly").collect()
-    assert(mapOut.forall(_.getInt(0) == 1))
-  }
-
-  test("scoreAuto cuts over from broadcast to join at the budget, both paths equal") {
-    val trained = Blooms.train(result.tiles, fpp = 0.01)
-    val totalBytes = trained
-      .agg(sum(length(col("bloom")))).head.getLong(0)
-    assert(totalBytes > 0)
-    // selection: fits a budget just above its size, not one just below
-    assert(Blooms.fitsBroadcast(trained, budgetBytes = totalBytes))
-    assert(!Blooms.fitsBroadcast(trained, budgetBytes = totalBytes - 1))
-    // both forced paths score bit-identically through the auto entry point
-    val cols = Seq("latitude", "longitude", "amount", "user", "anomaly").map(col)
-    val viaBroadcast = Blooms.scoreAuto(tx, trained,
-      broadcastBudgetBytes = totalBytes).select(cols: _*)
-    val viaJoin = Blooms.scoreAuto(tx, trained,
-      broadcastBudgetBytes = totalBytes - 1).select(cols: _*)
-    assert(viaBroadcast.exceptAll(viaJoin).count() == 0 &&
-      viaJoin.exceptAll(viaBroadcast).count() == 0)
-    // and the pipeline serving leg runs end-to-end on the auto path
-    val served = GeoFraudPipeline.scoreTransactions(tx, result.tiles)
-    assert(served.columns.toSeq == tx.columns.toSeq :+ "anomaly")
-    assert(served.filter(col("anomaly") === 1).count() > 0)
-  }
-
-  test("h3-grid bloom scoring: all paths agree, and the grid mismatch hazard is real") {
-    import spark.implicits._
-    // blooms trained on REAL-H3 tiles of every point's own cell
-    val tiles = tx.select(col("user"), graft.functions.GeoFunctions
-      .geoToH3(col("latitude"), col("longitude"), 10).as("h3"))
-    val trained = Blooms.train(tiles, fpp = 0.01)
-    val cols = Seq("latitude", "longitude", "amount", "user", "anomaly").map(col)
-    val viaMap = Blooms.score(tx, Blooms.toMap(trained), 10, grid = "h3")
-      .select(cols: _*)
-    val viaJoin = Blooms.scoreByJoin(tx, trained, 10, grid = "h3")
-      .select(cols: _*)
-    assert(viaMap.exceptAll(viaJoin).count() == 0 &&
-      viaJoin.exceptAll(viaMap).count() == 0)
-    // FN=0: every point's own tile is trained, so nothing is anomalous
-    assert(viaMap.filter($"anomaly" === 1).count() == 0)
-    // scoreAuto forwards the grid on BOTH budget paths
-    val totalBytes = trained.agg(sum(length(col("bloom")))).head.getLong(0)
-    val autoB = Blooms.scoreAuto(tx, trained, 10,
-      broadcastBudgetBytes = totalBytes, grid = "h3").select(cols: _*)
-    val autoJ = Blooms.scoreAuto(tx, trained, 10,
-      broadcastBudgetBytes = totalBytes - 1, grid = "h3").select(cols: _*)
-    assert(autoB.exceptAll(viaMap).count() == 0 &&
-      autoJ.exceptAll(viaMap).count() == 0)
-    // the serving entry point carries the grid through
-    val served = GeoFraudPipeline.scoreTransactions(tx, tiles, grid = "h3")
-    assert(served.filter(col("anomaly") === 1).count() == 0)
-    // and the hazard the param closes is REAL: probing h3-trained blooms
-    // with ENGINE cells flags (almost) everything anomalous
-    val wrong = Blooms.score(tx, Blooms.toMap(trained), 10)
-    val wrongFrac = wrong.filter(col("anomaly") === 1).count().toDouble /
-      tx.count().toDouble
-    assert(wrongFrac > 0.95, s"mismatched grid only flagged $wrongFrac")
-    // unknown grid names refuse eagerly
-    val e = intercept[IllegalArgumentException](
-      Blooms.score(tx, Blooms.toMap(trained), 10, grid = "s2"))
-    assert(e.getMessage.contains("s2"), e.getMessage)
-  }
-
   test("bloom training skips null tiles instead of NPE-ing") {
     import spark.implicits._
     val tiles = Seq(("u", Some("CELL1")), ("u", None), (null, Some("CELL2")))
@@ -166,6 +81,18 @@ class PipelineSpec extends SparkSpec {
     val blooms = Blooms.toMap(Blooms.train(tiles))
     assert(blooms.keySet == Set("u"))
     assert(blooms("u").mightContainString("CELL1"))
+  }
+
+  test("run treats a null-coordinate transaction as noise and flags it") {
+    import spark.implicits._
+    val tx3 = Seq((Some(40.7000), -74.0, 1.0, "u"), (Some(40.7001), -74.0, 2.0, "u"),
+      (Option.empty[Double], -74.0, 3.0, "u"))
+      .toDF("latitude", "longitude", "amount", "user")
+    val r = GeoFraudPipeline.run(spark, tx3, epsilon = 100.0, minPts = 1,
+      tilePrecision = 10, tileLayers = 0)
+    assert(r.tiles.count() > 0)
+    // the located pair is covered; the point without a tile is anomalous
+    assert(r.anomalies.select("amount").as[Double].collect().toSeq == Seq(3.0))
   }
 
   test("golden: unknown user is fully anomalous at serve time") {

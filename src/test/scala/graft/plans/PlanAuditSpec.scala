@@ -165,7 +165,7 @@ class PlanAuditSpec extends SparkSpec {
     df.collect() // count() would execute a different (agg) plan
     val p = df.queryExecution.executedPlan.toString
     // '*(n)' prefixes mark codegen stages; the cell projection must carry one
-    assert(p.linesIterator.exists(l => l.contains("*(") && l.contains("format_string")), p)
+    assert(p.linesIterator.exists(l => l.contains("*(") && l.contains("geo_cell(")), p)
   }
 
   test("q188 repetition stays map-side: no explode, no aggregation shuffle") {

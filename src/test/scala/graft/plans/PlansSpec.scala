@@ -114,6 +114,40 @@ class PlansSpec extends SparkSpec {
     }
   }
 
+  test("GeoFunctions.geoCell equals the format_string composite it replaced") {
+    import spark.implicits._
+    // the built-in composition geoCell was spelled as before the native
+    // expression took over
+    def composite(lat: Column, lng: Column, res: Int): Column = {
+      val step = graft.geo.GeoCell.stepDegrees(res)
+      val rows = 1L << (res + 8)
+      val cols = 1L << (res + 9)
+      val i = least(greatest(floor((lat + lit(90.0)) / lit(step)), lit(0L)), lit(rows - 1))
+      val j = pmod(floor((lng + lit(180.0)) / lit(step)).cast("long"), lit(cols))
+      format_string("%X%07X%07X", lit(res), i.cast("long"), j)
+    }
+    val edges = Seq(90.0, -90.0, 180.0, -180.0, 0.0, 40.7128, -74.006, 1e3, -1e3,
+      1e300, -1e300, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+      .map(Option(_)) :+ None
+    val df = (for (a <- edges; b <- edges) yield (a, b)).toDF("lat", "lng")
+    for (res <- graft.geo.GeoCell.MinResolution to graft.geo.GeoCell.MaxResolution) {
+      val rows = df.select(graft.functions.GeoFunctions.geoCell($"lat", $"lng", res),
+        composite($"lat", $"lng", res), $"lat", $"lng").collect()
+      rows.foreach { r =>
+        if (r.isNullAt(2) || r.isNullAt(3))
+          // the one difference: a null coordinate has no cell. The composite
+          // clamped a null latitude to row 0 (greatest/least skip nulls) and
+          // printed a null longitude as "null" — ids that name no point
+          assert(r.isNullAt(0) && !r.isNullAt(1), r)
+        else assert(r.getString(0) == r.getString(1), s"res $res: $r")
+      }
+    }
+    // the resolution is checked when the column is built
+    val e = intercept[IllegalArgumentException](
+      graft.functions.GeoFunctions.geoCell($"lat", $"lng", 16))
+    assert(e.getMessage.contains("resolution 16"), e.getMessage)
+  }
+
   test("vec_dot is SQL-callable via the function registry with type checking") {
     spark.sessionState.functionRegistry.registerFunction(
       new org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot_native"),
