@@ -29,9 +29,9 @@ object Bench {
     // whatever remains is recorded as a machine-readable "dirty" flag the
     // next reader can gate on instead of reconciling prose.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val dirtyThreshold = sys.env.get("SPARK_GRAFT_DIRTY_LOAD").map(_.toDouble)
-      .getOrElse(math.max(2.0, cpus.toDouble / 8.0))
-    val idleWaitMax = sys.env.get("SPARK_GRAFT_IDLE_WAIT_S").map(_.toLong).getOrElse(120L)
+    val dirtyThreshold = envOr("SPARK_GRAFT_DIRTY_LOAD",
+      math.max(2.0, cpus.toDouble / 8.0))(_.toDouble)
+    val idleWaitMax = envOr("SPARK_GRAFT_IDLE_WAIT_S", 120L)(_.toLong)
     val idleDeadline = System.currentTimeMillis() + idleWaitMax * 1000L
     var loadAvgBoot = osBean.getSystemLoadAverage
     while (loadAvgBoot > dirtyThreshold && System.currentTimeMillis() < idleDeadline) {
@@ -444,6 +444,21 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","cpuTotalSec":${r3(cpuTotal)},"dirty":$dirty,"n_queries":${results.size},"n_errors":${results.count(!_._3)},"staging_in_lap":$stagingInLap,"cache_rebuilt":$cacheRebuilt,"contention":$contention,"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** The env variable `name` parsed by `parse`, or `default` when it is
+    * unset. A value that does not parse is reported through `warn`, naming
+    * the variable and the value, and falls back to `default` instead of
+    * failing the lap. */
+  private[graft] def envOr[T](name: String, default: T,
+                              env: Map[String, String] = sys.env,
+                              warn: String => Unit = System.err.println)
+                             (parse: String => T): T =
+    env.get(name).fold(default) { v =>
+      try parse(v.trim) catch { case _: NumberFormatException =>
+        warn(s"[bench] $name='$v' is not a number; using the default $default")
+        default
+      }
+    }
 
   /** The run/cpu ratio past which a lap reads as contended even when the
     * load samples missed the co-tenant (idle laps measure ~1.0–1.3 on

@@ -1,6 +1,6 @@
 package graft.cluster
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an edge list — GEOSCAN step 2's
@@ -28,14 +28,23 @@ import org.apache.spark.sql.functions._
   *
   * '''Hybrid finish''' (the shape the MapReduce-CC papers prescribe): the
   * distributed loop exists to SHRINK a graph that doesn't fit anywhere;
-  * once the contracted edge set is below a bounded cap it is union-found on
-  * the driver in one pass — milliseconds, versus a fleet of near-empty
+  * once an edge set is below a bounded cap it is union-found on the
+  * driver in one pass — milliseconds, versus a fleet of near-empty
   * contraction jobs whose per-round scheduling cost dwarfs the data.
-  * The cap is checked against the exact count the convergence-signature
-  * aggregate already returns, so the check is free, and the collect is
-  * bounded by construction (≤ `localFinishEdges` rows of two longs). At
-  * 100 TB the edge set contracts geometrically, so the distributed phase
-  * runs O(log(n/cap)) rounds and the tail always finishes locally.
+  * The cap is checked against counts that actions already return, so the
+  * check is free and the collect is bounded by construction
+  * (≤ `localFinishEdges` rows of two longs):
+  *   - the RAW input: the job that checkpoints the caller's edges also
+  *     counts them (an `Observation`). Under the cap the checkpoint rows
+  *     are union-found as they are — union-find tolerates duplicates,
+  *     both orientations and self-pairs — and, as every vertex appears in
+  *     them, the labels are already complete: no normalize, no signature
+  *     aggregate, no vertex join. GEOSCAN's per-cell forests end here;
+  *   - the contracted edge set: each distributed round's signature
+  *     aggregate returns its exact distinct count. The raw count is at
+  *     least the normalized count, so this is the same cap, reached later.
+  * At 100 TB the edge set contracts geometrically, so the distributed
+  * phase runs O(log(n/cap)) rounds and the tail always finishes locally.
   *
   * Distributed rounds are BATCHED two contractions per materialized job
   * (lazy `localCheckpoint` + the signature aggregate as the single action):
@@ -48,9 +57,9 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   /** @param edges two long columns `src`, `dst` (any orientation, dupes ok)
-    * @param localFinishEdges edge-count cap under which the contracted
-    *   graph is finished by driver union-find (set 0 to force the fully
-    *   distributed path, e.g. in specs)
+    * @param localFinishEdges edge-count cap under which the edges (raw, or
+    *   once contracted) are finished by driver union-find (set 0 to force
+    *   the fully distributed path, e.g. in specs)
     * @return (id, component) for every vertex appearing in an edge */
   def run(edges: DataFrame, maxIter: Int = 64,
           localFinishEdges: Long = 2000000L): DataFrame = {
@@ -62,11 +71,50 @@ object ConnectedComponents {
         .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
         .distinct()
 
+    // ---- driver union-find over a BOUNDED edge set: path-halving find,
+    // union-by-min so the representative is the component minimum — the
+    // same label the star extraction produces. One bounded collect
+    // (≤ localFinishEdges rows × 16 bytes), then a local labels relation:
+    // (id, component) for every id in `ed`, plus the (null, null) row the
+    // vertex join gives a null endpoint.
+    def localFinish(ed: DataFrame): DataFrame = {
+      val rows = ed.select($"src", $"dst").collect()
+      val parent = scala.collection.mutable.LongMap.empty[Long]
+      def findRoot(x0: Long): Long = {
+        var x = x0
+        var p = parent.getOrElse(x, { parent.update(x, x); x })
+        while (p != x) {
+          val g = parent(p)
+          parent.update(x, g) // path halving
+          x = g
+          p = parent(x)
+        }
+        x
+      }
+      var sawNull = false
+      rows.foreach { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) {
+          sawNull = true
+          (0 to 1).foreach(c => if (!r.isNullAt(c)) findRoot(r.getLong(c)))
+        } else {
+          val ra = findRoot(r.getLong(0))
+          val rb = findRoot(r.getLong(1))
+          if (ra != rb) { if (ra < rb) parent.update(rb, ra) else parent.update(ra, rb) }
+        }
+      }
+      val labels = parent.keys.toSeq.map(k => (k, findRoot(k))).toDF("id", "component")
+      if (!sawNull) labels
+      else labels.union(Seq[(Option[Long], Option[Long])]((None, None)).toDF("id", "component"))
+    }
+
     // materialize the caller's edge lineage ONCE (in Geoscan.fit it is the
-    // epsilon self-join) — both the round-0 edge set and the final vertex
-    // set then read this checkpoint instead of re-deriving the input
+    // two cell-grouped passes), counting its rows in the same job. Under
+    // the cap these rows are the whole input of the local finish.
+    val rawRows = Observation()
     val raw = edges.select($"src".cast("long"), $"dst".cast("long"))
+      .observe(rawRows, count(lit(1)).as("n"))
       .localCheckpoint(true)
+    if (rawRows.get("n").asInstanceOf[Long] <= localFinishEdges) return localFinish(raw)
 
     // vertices from the RAW edges: a vertex whose only edge is a self-loop
     // still belongs in the output (own singleton component). Lazy — used
@@ -109,39 +157,11 @@ object ConnectedComponents {
       (ck, (sigRow.getLong(0), if (sigRow.isNullAt(1)) 0L else sigRow.getLong(1)))
     }
 
-    // ---- driver union-find over a BOUNDED contracted edge set: path-halving
-    // find, union-by-min so the representative is the component minimum —
-    // the same label the star extraction produces. One bounded collect
-    // (≤ localFinishEdges rows × 16 bytes), then a local labels relation
-    // the final vertex join broadcasts.
-    def localFinish(ed: DataFrame): DataFrame = {
-      val pairs = ed.select($"src", $"dst").as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def findRoot(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrElse(x, { parent.update(x, x); x })
-        while (p != x) {
-          val g = parent(p)
-          parent.update(x, g) // path halving
-          x = g
-          p = parent(x)
-        }
-        x
-      }
-      var i = 0
-      while (i < pairs.length) {
-        val ra = findRoot(pairs(i)._1)
-        val rb = findRoot(pairs(i)._2)
-        if (ra != rb) { if (ra < rb) parent.update(rb, ra) else parent.update(ra, rb) }
-        i += 1
-      }
-      parent.keys.toSeq.map(k => (k, findRoot(k))).toDF("id", "component")
-    }
-
-    // ---- contract until the graph is local-finishable, converged, or over
-    // budget. The signature job's count doubles as the cap check — no extra
-    // action. Round 0 materializes the normalized input (also what bounds
-    // localFinish: the cap compares against the DISTINCT normalized count).
+    // ---- over the cap: contract until the graph is local-finishable,
+    // converged, or over budget. Each signature job's distinct count
+    // doubles as the cap check — no extra action. Round 0 materializes the
+    // normalized input, whose count may already be under the cap (the raw
+    // rows held duplicates, reversed pairs or self-loops).
     var prevSig: (Long, Long) = (-1L, -1L)
     var (e, sig) = materialize(normalize(raw))
     var iter = 0
@@ -188,7 +208,9 @@ object ConnectedComponents {
         s"connected components did not converge within $maxIter rounds")
     }
 
-    // at fixpoint components are disjoint stars centered at their min id
+    // at fixpoint components are disjoint stars centered at their min id.
+    // The contracted edge set lacks the vertices whose only edges were
+    // self-loops: the vertex join restores them as their own components.
     val centers = labels.getOrElse {
       val sym = e.unionAll(e.select($"dst".as("src"), $"src".as("dst")))
       sym.groupBy($"src").agg(min($"dst").as("mn"))

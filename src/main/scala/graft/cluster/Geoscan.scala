@@ -94,9 +94,10 @@ private[cluster] object GeoscanIO {
   *  2. '''Clustering''' — the core points are grouped the same way. Each
   *     group union-finds its own points' edges to larger pids and emits a
   *     spanning forest plus one self-pair per own point;
-  *     [[ConnectedComponents]] (hook + pointer-jump, O(log n) rounds)
-  *     joins the per-cell forests. Labels are the min pid per component,
-  *     deterministic.
+  *     [[ConnectedComponents]] joins the per-cell forests — by one driver
+  *     union-find over the forest rows while they fit its local-finish
+  *     cap, else by star contraction. Labels are the min pid per
+  *     component, deterministic.
   *  3. '''Hulls''' — per-component convex hull (monotone chain) of core
   *     points; model state = (cluster, hull polygon).
   *
@@ -108,8 +109,9 @@ private[cluster] object GeoscanIO {
   * data reaches the poles or epsilon exceeds the coarsest cell). Memory per
   * group is one cell's (2k+1)² neighbourhood; `sampleMaxPerCell` bounds it
   * on dense cells. Connected components see a forest of at most
-  * (2k+1)² + 1 rows per core point, not the epsilon-edge set, and run
-  * O(log n) bounded rounds over it regardless of graph diameter.
+  * (2k+1)² + 1 rows per core point, not the epsilon-edge set. Up to their
+  * local-finish cap they collect it to the driver (two longs a row);
+  * above it they run O(log² n) bounded rounds regardless of graph diameter.
   */
 class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with GeoscanParams {
   def this() = this(org.apache.spark.ml.util.Identifiable.randomUID("geoscan"))
@@ -193,7 +195,11 @@ class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with Geo
     // component never collects all its points into one task:
     // hull(A ∪ B) = hull(hull(A) ∪ hull(B)), and a hull of n points has
     // ~O(log n) vertices, so the final per-component merge sees only
-    // #partitions × O(log n) vertices regardless of component size
+    // #partitions × O(log n) vertices regardless of component size.
+    // Under the local-finish cap `components` is a local relation with one
+    // row per core point, so the join broadcasts it against the pid
+    // checkpoint instead of shuffling both sides (above Spark's broadcast
+    // threshold it shuffles as before)
     val corePts = pts.join(components, "pid")
     val partialHulls = corePts.select($"component", $"lat", $"lng")
       .as[(Long, Double, Double)]

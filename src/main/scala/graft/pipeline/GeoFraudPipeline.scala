@@ -23,6 +23,20 @@ object GeoFraudPipeline {
   def readTransactions(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(transactionSchema).option("header", "true").csv(path)
 
+  /** The reference's own `data/transactions.csv`, the input of every
+    * golden replay (`PipelineSpec`, q287, q291, `GoldenSoak`), read with
+    * [[readTransactions]]. `SPARK_GRAFT_GOLDEN_CSV` overrides its location.
+    * A missing file fails here, with one message naming the path and the
+    * variable, not inside a task. */
+  def readGoldenTransactions(spark: SparkSession): DataFrame = {
+    val path = sys.env.getOrElse("SPARK_GRAFT_GOLDEN_CSV", "/root/reference/data/transactions.csv")
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      throw new java.io.FileNotFoundException(
+        s"golden transactions CSV not found at $path; set SPARK_GRAFT_GOLDEN_CSV to its location")
+    readTransactions(spark, path)
+  }
+
   case class Result(
       model: GeoscanPersonalizedModel,
       tiles: DataFrame,     // user, cluster, h3, tf_idf  (FIXTURES A2)

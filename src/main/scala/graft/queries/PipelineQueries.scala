@@ -414,9 +414,7 @@ object PipelineQueries {
     "q287_golden_pipeline_h3" -> ((s, dir) => {
       import s.implicits._
       // the golden input is dir-independent: the reference ships it
-      val tx = GeoFraudPipeline
-        .readTransactions(s, "/root/reference/data/transactions.csv")
-        .localCheckpoint(true)
+      val tx = GeoFraudPipeline.readGoldenTransactions(s).localCheckpoint(true)
       val r = GeoFraudPipeline.run(s, tx, epsilon = 100.0, minPts = 3,
         tilePrecision = 10, tileLayers = 5, grid = "h3")
       val tiles = r.tiles.localCheckpoint(true)
@@ -541,8 +539,7 @@ object PipelineQueries {
       Tables.stageOnce(s, base, "golden_tiles_zorder_v1") {
         val bp = new org.apache.hadoop.fs.Path(base)
         bp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(bp, true)
-        val txG = GeoFraudPipeline.readTransactions(
-          s, "/root/reference/data/transactions.csv").localCheckpoint(true)
+        val txG = GeoFraudPipeline.readGoldenTransactions(s).localCheckpoint(true)
         val r = GeoFraudPipeline.run(s, txG, epsilon = 100.0, minPts = 3,
           tilePrecision = 10, tileLayers = 5, grid = "h3")
         graft.sources.DeltaLogWriter.write(

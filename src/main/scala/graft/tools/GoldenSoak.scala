@@ -50,9 +50,7 @@ object GoldenSoak {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val base = GeoFraudPipeline
-      .readTransactions(spark, "/root/reference/data/transactions.csv")
-      .localCheckpoint(true)
+    val base = GeoFraudPipeline.readGoldenTransactions(spark).localCheckpoint(true)
 
     for (m <- multipliers) {
       val copies = spark.range(m).select(col("id").cast("int").as("__copy"))

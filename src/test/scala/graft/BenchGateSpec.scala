@@ -48,4 +48,21 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.cacheRebuilds(
       Map(1 -> 2, 2 -> 0, 3 -> 4), Map(1 -> 0, 2 -> 0, 3 -> 1)) == 2)
   }
+
+  test("envOr: a malformed env value warns, naming it, and falls back to the default") {
+    val warned = scala.collection.mutable.ArrayBuffer.empty[String]
+    def load(env: Map[String, String]) =
+      Bench.envOr("SPARK_GRAFT_DIRTY_LOAD", 4.0, env, warned += _)(_.toDouble)
+    def idle(env: Map[String, String]) =
+      Bench.envOr("SPARK_GRAFT_IDLE_WAIT_S", 120L, env, warned += _)(_.toLong)
+    assert(load(Map.empty) == 4.0 && idle(Map.empty) == 120L && warned.isEmpty)
+    assert(load(Map("SPARK_GRAFT_DIRTY_LOAD" -> " 2.5 ")) == 2.5)
+    assert(idle(Map("SPARK_GRAFT_IDLE_WAIT_S" -> "30")) == 30L && warned.isEmpty)
+    assert(load(Map("SPARK_GRAFT_DIRTY_LOAD" -> "high")) == 4.0)
+    assert(idle(Map("SPARK_GRAFT_IDLE_WAIT_S" -> "1.5")) == 120L)
+    assert(idle(Map("SPARK_GRAFT_IDLE_WAIT_S" -> "")) == 120L)
+    assert(warned.size == 3)
+    assert(warned(0).contains("SPARK_GRAFT_DIRTY_LOAD") && warned(0).contains("'high'"))
+    assert(warned(1).contains("SPARK_GRAFT_IDLE_WAIT_S") && warned(1).contains("'1.5'"))
+  }
 }

@@ -80,6 +80,47 @@ class ConnectedComponentsSpec extends SparkSpec {
       Map(7L -> 7L, 1L -> 1L, 2L -> 1L))
   }
 
+  test("raw-row local finish, contracted local finish and distributed path agree on messy edges") {
+    val r = new Random(41)
+    (1 to 4).foreach { _ =>
+      val n = 120
+      val base = Seq.fill(80)((r.nextInt(n).toLong, r.nextInt(n).toLong))
+      // duplicates, both orientations, self-loops on edge vertices, and
+      // vertices whose only edge is a self-loop
+      val edges = r.shuffle(base ++ base.take(20) ++ base.take(30).map(_.swap) ++
+        base.take(10).map(e => (e._1, e._1)) ++
+        Seq.fill(5)(n + r.nextInt(50).toLong).map(v => (v, v)))
+      val raw = edges.size.toLong
+      // cap = raw rows: the raw checkpoint is union-found; raw - 1: round
+      // 0's normalized set (smaller, for the duplicates) is union-found;
+      // 0: contraction to the fixpoint
+      val viaRaw = cc(edges, localFinishEdges = raw)
+      assert(viaRaw == cc(edges, localFinishEdges = raw - 1))
+      assert(viaRaw == cc(edges, localFinishEdges = 0L))
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = { val p = parent.getOrElseUpdate(x, x); if (p == x) x else find(p) }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      assert(viaRaw == parent.keys.map(v => v -> find(v)).toMap)
+    }
+  }
+
+  test("a null endpoint gives the same rows on every path") {
+    import spark.implicits._
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(5L)), (Some(3L), Some(3L)),
+      (Some(2L), Some(1L)))
+    def rows(cap: Long) = ConnectedComponents.run(edges.toDF("src", "dst"), localFinishEdges = cap)
+      .as[(Option[Long], Option[Long])].collect().toSet
+    val expected = Set((Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(3L), Some(3L)),
+      (Some(5L), Some(5L)), (None, None))
+    assert(rows(edges.size) == expected)
+    assert(rows(edges.size - 1) == expected)
+    assert(rows(0L) == expected)
+  }
+
   test("GraphX twin computes identical components (random graphs)") {
     import spark.implicits._
     val r = new Random(17)

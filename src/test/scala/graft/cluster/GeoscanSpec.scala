@@ -3,7 +3,13 @@ package graft.cluster
 import graft.SparkSpec
 import graft.geo.ConvexHull
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.Count
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** Estimator/Model behavior parity with SURVEY §2.9 (M1-M4). */
@@ -30,6 +36,45 @@ class GeoscanSpec extends SparkSpec {
     assert(labeled >= 70, s"only $labeled labeled") // tiling join approximates hull edges
     // the lone midpoint is noise
     assert(out.filter($"latitude" === 40.725).select("cluster").head.isNullAt(0))
+  }
+
+  test("a fit under the local-finish cap runs 4 SQL actions and no distinct or signature aggregate") {
+    // a session of its own: its listener sees only this fit's actions
+    val session = spark.newSession()
+    import session.implicits._
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add((funcName, qe.executedPlan))
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        actions.add((s"$funcName!failed", qe.executedPlan))
+    }
+    session.listenerManager.register(listener)
+    val fitted = try {
+      val model = new Geoscan().setEpsilon(150).setMinPts(3)
+        .fit(twoBlobs.toDF("latitude", "longitude"))
+      // callbacks arrive asynchronously but in order: once this marker
+      // action is recorded, every action of the fit is too
+      session.range(1).tail(1)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!actions.asScala.exists(_._1 == "tail") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      model
+    } finally session.listenerManager.unregister(listener)
+    assert(fitted.state.count() == 2)
+    val fit = actions.asScala.toSeq.takeWhile(_._1 != "tail")
+    // pid checkpoint, forest checkpoint, its local-finish collect, hulls
+    assert(fit.map(_._1) == Seq("localCheckpoint", "localCheckpoint", "collect", "count"))
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val aggs = fit.flatMap(a => nodes(a._2)).collect { case g: BaseAggregateExec => g }
+    // the only aggregate is the hull action's count: no distinct (an
+    // aggregate without functions), no bit_xor signature
+    assert(aggs.nonEmpty && aggs.forall(g => g.aggregateExpressions.nonEmpty &&
+      g.aggregateExpressions.forall(_.aggregateFunction.isInstanceOf[Count])), aggs.mkString("\n"))
   }
 
   /** The fitted state built on the driver from [[Dbscan.cluster]]: per

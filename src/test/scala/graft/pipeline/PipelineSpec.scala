@@ -10,10 +10,8 @@ import org.apache.spark.sql.functions._
   * bloom and anomaly laws also run on in-repo data in `graft.score.BloomsSpec`. */
 class PipelineSpec extends SparkSpec {
 
-  private val csv = "/root/reference/data/transactions.csv"
-
   private lazy val tx = {
-    val df = GeoFraudPipeline.readTransactions(spark, csv)
+    val df = GeoFraudPipeline.readGoldenTransactions(spark)
     df.persist(); df.count(); df
   }
 
