@@ -39,7 +39,10 @@ import org.apache.spark.sql.functions._
   *     are union-found as they are — union-find tolerates duplicates,
   *     both orientations and self-pairs — and, as every vertex appears in
   *     them, the labels are already complete: no normalize, no signature
-  *     aggregate, no vertex join. GEOSCAN's per-cell forests end here;
+  *     aggregate, no vertex join. Under the cap `Geoscan.fit` does not
+  *     call [[run]]: it checks the same cap on its own forest checkpoint,
+  *     which also carries per-cell partial hulls, and runs the same
+  *     [[unionFind]] over that one collect;
   *   - the contracted edge set: each distributed round's signature
   *     aggregate returns its exact distinct count. The raw count is at
   *     least the normalized count, so this is the same cap, reached later.
@@ -56,13 +59,43 @@ import org.apache.spark.sql.functions._
   * (both reduce every vertex to its component's minimum). */
 object ConnectedComponents {
 
+  /** Default of [[run]]'s `localFinishEdges`: the largest edge set (or
+    * forest) finished on the driver. */
+  private[cluster] val LocalFinishEdges: Long = 2000000L
+
+  /** Driver union-find over `pairs`: path-halving find, union by min, so
+    * every vertex maps to its component's minimum vertex — the label the
+    * star extraction produces. A pair (v, v) registers v alone. */
+  private[cluster] def unionFind(pairs: Iterator[(Long, Long)])
+      : scala.collection.mutable.LongMap[Long] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def findRoot(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrElse(x, { parent.update(x, x); x })
+      while (p != x) {
+        val g = parent(p)
+        parent.update(x, g) // path halving
+        x = g
+        p = parent(x)
+      }
+      x
+    }
+    pairs.foreach { case (a, b) =>
+      val ra = findRoot(a)
+      val rb = findRoot(b)
+      if (ra != rb) { if (ra < rb) parent.update(rb, ra) else parent.update(ra, rb) }
+    }
+    parent.keys.toArray.foreach(k => parent.update(k, findRoot(k)))
+    parent
+  }
+
   /** @param edges two long columns `src`, `dst` (any orientation, dupes ok)
     * @param localFinishEdges edge-count cap under which the edges (raw, or
     *   once contracted) are finished by driver union-find (set 0 to force
     *   the fully distributed path, e.g. in specs)
     * @return (id, component) for every vertex appearing in an edge */
   def run(edges: DataFrame, maxIter: Int = 64,
-          localFinishEdges: Long = 2000000L): DataFrame = {
+          localFinishEdges: Long = LocalFinishEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -71,45 +104,27 @@ object ConnectedComponents {
         .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
         .distinct()
 
-    // ---- driver union-find over a BOUNDED edge set: path-halving find,
-    // union-by-min so the representative is the component minimum — the
-    // same label the star extraction produces. One bounded collect
-    // (≤ localFinishEdges rows × 16 bytes), then a local labels relation:
-    // (id, component) for every id in `ed`, plus the (null, null) row the
-    // vertex join gives a null endpoint.
+    // ---- driver finish over a BOUNDED edge set: one collect
+    // (≤ localFinishEdges rows × 16 bytes), [[unionFind]], then a local
+    // labels relation: (id, component) for every id in `ed`, plus the
+    // (null, null) row the vertex join gives a null endpoint.
     def localFinish(ed: DataFrame): DataFrame = {
-      val rows = ed.select($"src", $"dst").collect()
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def findRoot(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrElse(x, { parent.update(x, x); x })
-        while (p != x) {
-          val g = parent(p)
-          parent.update(x, g) // path halving
-          x = g
-          p = parent(x)
-        }
-        x
-      }
       var sawNull = false
-      rows.foreach { r =>
+      val labels = unionFind(ed.select($"src", $"dst").collect().iterator.flatMap { r =>
         if (r.isNullAt(0) || r.isNullAt(1)) {
           sawNull = true
-          (0 to 1).foreach(c => if (!r.isNullAt(c)) findRoot(r.getLong(c)))
-        } else {
-          val ra = findRoot(r.getLong(0))
-          val rb = findRoot(r.getLong(1))
-          if (ra != rb) { if (ra < rb) parent.update(rb, ra) else parent.update(ra, rb) }
-        }
-      }
-      val labels = parent.keys.toSeq.map(k => (k, findRoot(k))).toDF("id", "component")
-      if (!sawNull) labels
-      else labels.union(Seq[(Option[Long], Option[Long])]((None, None)).toDF("id", "component"))
+          // the other endpoint is still a vertex: its own pair registers it
+          (0 to 1).find(!r.isNullAt(_)).map(c => (r.getLong(c), r.getLong(c)))
+        } else Some((r.getLong(0), r.getLong(1)))
+      })
+      val local = labels.toSeq.toDF("id", "component")
+      if (!sawNull) local
+      else local.union(Seq[(Option[Long], Option[Long])]((None, None)).toDF("id", "component"))
     }
 
-    // materialize the caller's edge lineage ONCE (in Geoscan.fit it is the
-    // two cell-grouped passes), counting its rows in the same job. Under
-    // the cap these rows are the whole input of the local finish.
+    // materialize the caller's edge lineage ONCE (e.g. Dedup's candidate
+    // pairs), counting its rows in the same job. Under the cap these rows
+    // are the whole input of the local finish.
     val rawRows = Observation()
     val raw = edges.select($"src".cast("long"), $"dst".cast("long"))
       .observe(rawRows, count(lit(1)).as("n"))

@@ -93,13 +93,15 @@ private[cluster] object GeoscanIO {
   *     aggregate. Points of degree < minPts are dropped.
   *  2. '''Clustering''' — the core points are grouped the same way. Each
   *     group union-finds its own points' edges to larger pids and emits a
-  *     spanning forest plus one self-pair per own point;
-  *     [[ConnectedComponents]] joins the per-cell forests — by one driver
-  *     union-find over the forest rows while they fit its local-finish
-  *     cap, else by star contraction. Labels are the min pid per
+  *     spanning forest, plus one root row per local set of own points that
+  *     carries the convex hull (monotone chain) of those points. The
+  *     per-cell forests are joined by one driver union-find over the
+  *     forest rows while they fit [[ConnectedComponents]]' local-finish
+  *     cap, else by its star contraction. Labels are the min pid per
   *     component, deterministic.
-  *  3. '''Hulls''' — per-component convex hull (monotone chain) of core
-  *     points; model state = (cluster, hull polygon).
+  *  3. '''Hulls''' — per component, the merged hull of its partial hulls
+  *     (every core point is in exactly one); model state = (cluster, hull
+  *     polygon).
   *
   * An edge is a pair at haversine ≤ epsilon whose larger-pid point lies in
   * a cell of the smaller-pid point's cover.
@@ -109,9 +111,12 @@ private[cluster] object GeoscanIO {
   * data reaches the poles or epsilon exceeds the coarsest cell). Memory per
   * group is one cell's (2k+1)² neighbourhood; `sampleMaxPerCell` bounds it
   * on dense cells. Connected components see a forest of at most
-  * (2k+1)² + 1 rows per core point, not the epsilon-edge set. Up to their
-  * local-finish cap they collect it to the driver (two longs a row);
-  * above it they run O(log² n) bounded rounds regardless of graph diameter.
+  * (2k+1)² + 1 rows per core point, not the epsilon-edge set. Up to the
+  * local-finish cap the fit collects it to the driver (two longs a row,
+  * and at most one hull vertex per core point over all rows) and finishes
+  * labels and hulls there; above it connected components run O(log² n)
+  * bounded rounds regardless of graph diameter, and only the partial-hull
+  * rows are joined with their labels.
   */
 class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with GeoscanParams {
   def this() = this(org.apache.spark.ml.util.Identifiable.randomUID("geoscan"))
@@ -119,7 +124,12 @@ class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with Geo
   override def copy(extra: ParamMap): Geoscan = defaultCopy(extra)
   override def transformSchema(schema: StructType): StructType = validateInput(schema)
 
-  override def fit(dataset: Dataset[_]): GeoscanModel = {
+  override def fit(dataset: Dataset[_]): GeoscanModel =
+    fit(dataset, ConnectedComponents.LocalFinishEdges)
+
+  /** [[fit]] with the forest size under which labels and hulls are
+    * finished on the driver (0 forces the distributed path, in specs). */
+  private[cluster] def fit(dataset: Dataset[_], localFinishEdges: Long): GeoscanModel = {
     val spark = dataset.sparkSession
     import spark.implicits._
     val eps = $(epsilon)
@@ -182,51 +192,68 @@ class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with Geo
       else byCell(located).mapPartitions(rows =>
         Geoscan.cellGroups(rows, eps, res).flatMap(_.corePoints(mp)))
 
-    // step 2: per-cell spanning forests, joined by connected components. A
-    // core point with no core neighbor keeps only its self-pair: its own
-    // single-point cluster (the reference drops only the low-degree
-    // vertices, 01_geofraud_clustering.py:28)
+    // step 2: per-cell spanning forests, each local set of own points
+    // carrying the hull of those points (its step-3 input). A core point
+    // with no core neighbor is its own set: its own single-point cluster
+    // (the reference drops only the low-degree vertices,
+    // 01_geofraud_clustering.py:28). The forest is checkpointed once and
+    // counted in the same job
+    val forestRows = Observation()
     val forest = byCell(core).mapPartitions(rows =>
       Geoscan.cellGroups(rows, eps, res).flatMap(_.spanningForest()))
-    val components = ConnectedComponents.run(forest.toDF("src", "dst"))
-      .toDF("pid", "component")
+      .toDF("src", "dst", "hull")
+      .observe(forestRows, count(lit(1)).as("n"))
+      .localCheckpoint(true)
 
-    // step 3: hulls per component over core points — two-level so a giant
-    // component never collects all its points into one task:
-    // hull(A ∪ B) = hull(hull(A) ∪ hull(B)), and a hull of n points has
-    // ~O(log n) vertices, so the final per-component merge sees only
-    // #partitions × O(log n) vertices regardless of component size.
-    // Under the local-finish cap `components` is a local relation with one
-    // row per core point, so the join broadcasts it against the pid
-    // checkpoint instead of shuffling both sides (above Spark's broadcast
-    // threshold it shuffles as before)
-    val corePts = pts.join(components, "pid")
-    val partialHulls = corePts.select($"component", $"lat", $"lng")
-      .as[(Long, Double, Double)]
-      .mapPartitions { it =>
-        // incremental fold, NOT it.toSeq.groupBy: memory is bounded by
-        // #components × (buffer cap + O(hull)), never the partition size.
-        // Collapsing the buffer to its hull is lossless —
-        // hull(A ∪ B) = hull(hull(A) ∪ B).
-        val acc = scala.collection.mutable.HashMap
-          .empty[Long, scala.collection.mutable.ArrayBuffer[(Double, Double)]]
-        it.foreach { case (c, lat, lng) =>
-          val buf = acc.getOrElseUpdate(c, scala.collection.mutable.ArrayBuffer.empty)
-          buf += ((lat, lng))
-          if (buf.length >= 256) {
-            val h = ConvexHull.hull(buf.toSeq)
-            buf.clear()
-            buf ++= h
+    // step 3: hulls per component, merged from the partial hulls:
+    // hull(A ∪ B) = hull(hull(A) ∪ hull(B)), and every core point is in
+    // exactly one partial hull (the one of its own cell's set).
+    val state =
+      if (forestRows.get("n").asInstanceOf[Long] <= localFinishEdges) {
+        // under the cap one collect finishes both steps on the driver: the
+        // rows are bounded by the cap and their hull vertices by the core
+        // points. Labels are the min pid per component, as in
+        // ConnectedComponents; the state is a small local relation
+        val rows = forest.as[Geoscan.ForestRow].collect()
+        val label = ConnectedComponents.unionFind(rows.iterator.map(r => (r._1, r._2)))
+        rows.filter(_._3.nonEmpty).groupMap(r => label(r._1))(_._3).toSeq
+          .map { case (c, parts) => (c, Geoscan.mergeHulls(parts.iterator)) }
+          .toDF("cluster", "hull")
+      } else {
+        // above it the forest's (src, dst) projection is labelled by star
+        // contraction, and only the partial-hull rows meet the labels. Two
+        // levels, so a giant component never collects all its partial
+        // hulls into one task: a per-partition fold first, then the merge
+        // per component sees only #partitions × O(hull) vertices
+        val components = ConnectedComponents.run(forest.select($"src", $"dst"),
+          localFinishEdges = localFinishEdges).toDF("src", "cluster")
+        val merged = forest.where(size($"hull") > 0).select($"src", $"hull")
+          .join(components, "src")
+          .select($"cluster", $"hull").as[(Long, Seq[(Double, Double)])]
+          .mapPartitions { it =>
+            // incremental fold: memory is bounded by #components ×
+            // (buffer cap + O(hull)), never the partition size. Collapsing
+            // the buffer to its hull is lossless
+            val acc = scala.collection.mutable.HashMap
+              .empty[Long, scala.collection.mutable.ArrayBuffer[(Double, Double)]]
+            it.foreach { case (c, hull) =>
+              val buf = acc.getOrElseUpdate(c, scala.collection.mutable.ArrayBuffer.empty)
+              buf ++= hull
+              if (buf.length >= 256) {
+                val h = ConvexHull.hull(buf.toSeq)
+                buf.clear()
+                buf ++= h
+              }
+            }
+            acc.iterator.map { case (c, buf) => (c, ConvexHull.hull(buf.toSeq)) }
           }
-        }
-        acc.iterator.map { case (c, buf) => (c, ConvexHull.hull(buf.toSeq)) }
+          .groupByKey(_._1)
+          .mapGroups { (c, it) => (c, Geoscan.mergeHulls(it.map(_._2))) }
+          .toDF("cluster", "hull")
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        merged.count() // materialize before unpersisting inputs
+        merged
       }
-    val state = partialHulls
-      .groupByKey(_._1)
-      .mapGroups { (c, it) => (c, ConvexHull.hull(it.flatMap(_._2).toSeq)) }
-      .toDF("cluster", "hull")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    state.count() // materialize before unpersisting inputs
     pts.unpersist()
 
     val model = new GeoscanModel(uid, state)
@@ -238,6 +265,9 @@ object Geoscan {
 
   /** A point under one cell of its cover: (cell, pid, lat, lng, own cell). */
   private[cluster] type CoverRow = (Long, Long, Double, Double, Long)
+
+  /** A row of a cell's spanning forest: (member, root, partial hull). */
+  private[cluster] type ForestRow = (Long, Long, Seq[(Double, Double)])
 
   /** Cover rows sorted by cell → one [[CellGroup]] per cell, built one at a
     * time, so a task holds a single group in memory. */
@@ -298,10 +328,12 @@ object Geoscan {
       }.map(m => (pid(m), lat(m), lng(m)))
 
     /** Union-find over the edges from each own point to larger pids, as
-      * (member, root) per member joined to another, plus a self-pair per
-      * own point so that an isolated one still has a component. A pair
-      * already joined skips its haversine. */
-    def spanningForest(): Iterator[(Long, Long)] = {
+      * (member, root, no hull) per member joined to another, plus one
+      * (root, root, hull) per local set of own points: the hull of that
+      * set's own points, so that an isolated point still has a component
+      * and every own point is in exactly one partial hull. A pair already
+      * joined skips its haversine. */
+    def spanningForest(): Iterator[ForestRow] = {
       val parent = Array.range(0, n)
       def find(x0: Int): Int = {
         var x = x0
@@ -319,10 +351,16 @@ object Geoscan {
           q += 1
         }
       }
-      own.iterator.map(m => (pid(m), pid(m))) ++
-        (0 until n).iterator.filter(q => find(q) != q).map(q => (pid(q), pid(find(q))))
+      own.groupBy(find).iterator.map { case (r, ms) =>
+        (pid(r), pid(r), ConvexHull.hull(ms.map(m => (lat(m), lng(m)))))
+      } ++ (0 until n).iterator.filter(q => find(q) != q)
+        .map(q => (pid(q), pid(find(q)), Seq.empty[(Double, Double)]))
     }
   }
+
+  /** Hull of the union of `hulls`: hull(A ∪ B) = hull(hull(A) ∪ hull(B)). */
+  private[cluster] def mergeHulls(hulls: Iterator[Seq[(Double, Double)]]): Seq[(Double, Double)] =
+    ConvexHull.hull(hulls.flatten.toSeq)
 
   /** Deterministic per-cell cap: rank points inside each ~30 m (res 11) cell
     * by a stable key and keep the first `max` — the reference's sampling UDF

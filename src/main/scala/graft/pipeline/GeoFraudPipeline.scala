@@ -44,35 +44,54 @@ object GeoFraudPipeline {
 
   /** The TF-IDF personalization scoring over tiles
     * (`01_geofraud_clustering.py:386-418`): df = distinct visitors per tile,
-    * tf = a user's visits to their own tile, tf_idf = tf·ln(N/df). */
-  def tfidfTiles(tiles: DataFrame, pointsH3: DataFrame): DataFrame =
-    tfidfTiles(tiles, pointsH3, StorageLevel.MEMORY_AND_DISK)._1
+    * tf = a user's visits to their own tile, tf_idf = tf·ln(N/df).
+    *
+    * Lazy and cache-free: the result may be consumed long after this call,
+    * or never, so nothing is persisted on its behalf. N is folded into the
+    * plan as a broadcast one-row cross join (q16's spelling), so docFreq's
+    * subtree runs in the consuming job, its exchange shared by the tf join
+    * and the N count. */
+  def tfidfTiles(tiles: DataFrame, pointsH3: DataFrame): DataFrame = {
+    val (termFreq, docFreq) = tfidfFrequencies(tiles, pointsH3)
+    val n = docFreq.agg(count(lit(1)).cast("double").as("__n"))
+    termFreq.join(docFreq, Seq("h3")).crossJoin(broadcast(n))
+      .withColumn("tf_idf", col("tf") * log(col("__n") / col("df")))
+      .select("user", "cluster", "h3", "tf_idf")
+  }
 
-  /** [[tfidfTiles]] with the docFreq cache handed back: (tiles, docFreq).
-    * The caller unpersists docFreq once it has consumed the tiles. */
-  private def tfidfTiles(tiles: DataFrame, pointsH3: DataFrame,
-                         docFreqLevel: StorageLevel): (DataFrame, DataFrame) = {
+  /** (termFreq, docFreq) of [[tfidfTiles]]: (user, h3, cluster, tf) and
+    * (h3, df). */
+  private def tfidfFrequencies(tiles: DataFrame, pointsH3: DataFrame): (DataFrame, DataFrame) = {
     // distinct BEFORE the join: the reference joins the full multi-row tile
     // frame (`01_geofraud_clustering.py:389-392`) and distincts after — same
     // result, but per-cell fanout tiles×points blows up at scale (measured
     // ~130M intermediate rows on 600k points); one row per cell keeps the
     // join linear in the points
-    // persisted: docFreq has TWO eager consumers — the scalar-N count
-    // action below and the tf join — and un-cached the whole
-    // cells⋈points + two-distincts subtree ran twice per pipeline run
-    // (guide §5 persist-when-reused; bounded: one row per distinct cell)
     val docFreq = tiles.select(col("h3")).distinct()
       .join(pointsH3, Seq("h3"))
       .select("user", "h3").distinct()
       .groupBy("h3").agg(sum(lit(1)).as("df"))
-      .persist(docFreqLevel)
     val termFreq = tiles
       .join(pointsH3, Seq("h3", "user"))
       .groupBy("user", "h3", "cluster").agg(sum(lit(1)).as("tf"))
+    (termFreq, docFreq)
+  }
+
+  /** [[tfidfTiles]] for a tiles-table write, with the docFreq cache handed
+    * back: (tiles, docFreq). The caller unpersists docFreq once it has
+    * written the tiles. */
+  private def tfidfTiles(tiles: DataFrame, pointsH3: DataFrame,
+                         docFreqLevel: StorageLevel): (DataFrame, DataFrame) = {
+    // persisted: docFreq has TWO eager consumers — the scalar-N count
+    // action below and the tf join — and un-cached the whole
+    // cells⋈points + two-distincts subtree ran twice per pipeline run
+    // (guide §5 persist-when-reused; bounded: one row per distinct cell)
+    val (termFreq, docFreqRaw) = tfidfFrequencies(tiles, pointsH3)
+    val docFreq = docFreqRaw.persist(docFreqLevel)
     // broadcast scalar N (01_geofraud_clustering.py:409) as a driver count
     // action (it also materializes the docFreq cache). Deliberately NOT
-    // the in-plan broadcast-1-row-cross-join spelling (q16 uses that): the
-    // tiles table goes through a repartitionByRange write downstream,
+    // the in-plan broadcast-1-row-cross-join spelling of the lazy path:
+    // the tiles table goes through a repartitionByRange write downstream,
     // whose range sampling re-executes the child — measured 7s slower at
     // sf0.1 with the fused spelling here.
     val n = docFreq.count()

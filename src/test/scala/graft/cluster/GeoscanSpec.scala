@@ -3,10 +3,11 @@ package graft.cluster
 import graft.SparkSpec
 import graft.geo.ConvexHull
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.aggregate.Count
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
@@ -38,7 +39,7 @@ class GeoscanSpec extends SparkSpec {
     assert(out.filter($"latitude" === 40.725).select("cluster").head.isNullAt(0))
   }
 
-  test("a fit under the local-finish cap runs 4 SQL actions and no distinct or signature aggregate") {
+  test("a fit under the local-finish cap runs 3 SQL actions, no join or aggregate") {
     // a session of its own: its listener sees only this fit's actions
     val session = spark.newSession()
     import session.implicits._
@@ -63,18 +64,20 @@ class GeoscanSpec extends SparkSpec {
     } finally session.listenerManager.unregister(listener)
     assert(fitted.state.count() == 2)
     val fit = actions.asScala.toSeq.takeWhile(_._1 != "tail")
-    // pid checkpoint, forest checkpoint, its local-finish collect, hulls
-    assert(fit.map(_._1) == Seq("localCheckpoint", "localCheckpoint", "collect", "count"))
+    // pid checkpoint, forest checkpoint, and the one collect that finishes
+    // labels and hulls on the driver
+    assert(fit.map(_._1) == Seq("localCheckpoint", "localCheckpoint", "collect"))
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => nodes(q.plan)
       case other => other +: other.children.flatMap(nodes)
     }
-    val aggs = fit.flatMap(a => nodes(a._2)).collect { case g: BaseAggregateExec => g }
-    // the only aggregate is the hull action's count: no distinct (an
-    // aggregate without functions), no bit_xor signature
-    assert(aggs.nonEmpty && aggs.forall(g => g.aggregateExpressions.nonEmpty &&
-      g.aggregateExpressions.forall(_.aggregateFunction.isInstanceOf[Count])), aggs.mkString("\n"))
+    // no points join, no hull aggregate, no cached state
+    val offending = fit.flatMap(a => nodes(a._2)).filter {
+      case _: BaseJoinExec | _: BaseAggregateExec | _: InMemoryTableScanExec => true
+      case _ => false
+    }
+    assert(offending.isEmpty, offending.mkString("\n"))
   }
 
   /** The fitted state built on the driver from [[Dbscan.cluster]]: per
@@ -100,25 +103,39 @@ class GeoscanSpec extends SparkSpec {
 
   /** Fits the distributed model and asserts its exact (cluster, hull) state
     * against [[driverState]]; returns that state. */
-  private def assertExactState(df: DataFrame, eps: Double, minPts: Int, cap: Int = 0)
-      : Seq[(Long, Seq[(Double, Double)])] = {
+  private def assertExactState(df: DataFrame, eps: Double, minPts: Int, cap: Int,
+      localFinishEdges: Long): Seq[(Long, Seq[(Double, Double)])] = {
     import spark.implicits._
-    val model = new Geoscan().setEpsilon(eps).setMinPts(minPts).setSampleMaxPerCell(cap).fit(df)
+    val model = new Geoscan().setEpsilon(eps).setMinPts(minPts).setSampleMaxPerCell(cap)
+      .fit(df, localFinishEdges)
     val fitted = model.state.as[(Long, Seq[(Double, Double)])].collect().toSeq.sortBy(_._1)
     val expected = driverState(df, eps, minPts, cap)
-    assert(fitted == expected, s"eps=$eps minPts=$minPts cap=$cap")
+    assert(fitted == expected, s"eps=$eps minPts=$minPts cap=$cap localFinishEdges=$localFinishEdges")
     expected
   }
 
   test("distributed clustering matches in-memory DBSCAN partitions (property)") {
+    exactStateLaw(ConnectedComponents.LocalFinishEdges)
+  }
+
+  test("above the local-finish cap the state matches in-memory DBSCAN (property)") {
+    exactStateLaw(0L)
+  }
+
+  /** The exact-state law over random clouds and the edge cases: under the
+    * cap labels and hulls finish on the driver; at cap 0 connected
+    * components contract and partial hulls are joined with the labels. */
+  private def exactStateLaw(localFinishEdges: Long): Unit = {
     import spark.implicits._
+    def exact(df: DataFrame, eps: Double, minPts: Int, cap: Int = 0) =
+      assertExactState(df, eps, minPts, cap, localFinishEdges)
     val r = new Random(5)
     // random clouds, each with duplicated points
     (1 to 3).foreach { _ =>
       val cloud = IndexedSeq.fill(120)(
         (40.70 + r.nextDouble() * 0.006, -74.00 + r.nextDouble() * 0.006))
       val pts = cloud ++ IndexedSeq.fill(20)(cloud(r.nextInt(cloud.length)))
-      assert(assertExactState(pts.toDF("latitude", "longitude"), 80.0, 3).nonEmpty)
+      assert(exact(pts.toDF("latitude", "longitude"), 80.0, 3).nonEmpty)
     }
 
     // minPts = 0: isolated points are single-point clusters; points without
@@ -126,14 +143,14 @@ class GeoscanSpec extends SparkSpec {
     val sparse = (twoBlobs ++ Seq((40.80, -73.90), (40.60, -74.10)))
       .map { case (la, ln) => (Option(la), Option(ln)) } ++
       Seq((None, Some(-74.0)), (Some(40.7), None), (None, None))
-    val zero = assertExactState(sparse.toDF("latitude", "longitude"), 50.0, 0)
+    val zero = exact(sparse.toDF("latitude", "longitude"), 50.0, 0)
     assert(zero.count(_._2.length == 1) >= 2)
 
     // one component of 1500 points in one partition: every per-partition
     // hull buffer collapses past 256 points
     val big = Seq.fill(1500)((40.72 + r.nextDouble() * 0.001, -73.99 + r.nextDouble() * 0.001))
     val bigDf = spark.sparkContext.parallelize(big, 1).toDF("latitude", "longitude")
-    assert(assertExactState(bigDf, 30.0, 3).length == 1)
+    assert(exact(bigDf, 30.0, 3).length == 1)
 
     // points on cell borders: exact row/column edges of the fit's grid and
     // their nearest doubles on either side
@@ -149,7 +166,7 @@ class GeoscanSpec extends SparkSpec {
         ((i0 + di + f) * step - 90, (j0 + dj) * step - 180))
       nudge <- Seq(0, -1, 1)
     } yield (la + nudge * math.ulp(la), ln - nudge * math.ulp(ln))
-    assert(assertExactState(border.toDF("latitude", "longitude"), eps, 4).nonEmpty)
+    assert(exact(border.toDF("latitude", "longitude"), eps, 4).nonEmpty)
 
     // one component spanning many cells: a zigzag chain ~3 km long
     val chain = (0 until 120).map { k =>
@@ -158,11 +175,11 @@ class GeoscanSpec extends SparkSpec {
     val chainRes = graft.geo.GeoCell.resolutionForEpsilon(40.0, 40.78)
     assert(chain.map { case (la, ln) => graft.geo.GeoCell.cellId(la, ln, chainRes) }
       .distinct.length >= 20)
-    assert(assertExactState(chain.toDF("latitude", "longitude"), 40.0, 2).length == 1)
+    assert(exact(chain.toDF("latitude", "longitude"), 40.0, 2).length == 1)
 
     // the per-cell cap: the same state as DBSCAN over the capped points
     val dense = Seq.tabulate(400)(k => (40.701 + (k % 20) * 2e-5, -74.001 + (k / 20) * 2e-5))
-    assert(assertExactState(dense.toDF("latitude", "longitude"), 50.0, 3, cap = 4).nonEmpty)
+    assert(exact(dense.toDF("latitude", "longitude"), 50.0, 3, cap = 4).nonEmpty)
   }
 
   test("toGeoJson emits an RFC 7946 FeatureCollection") {

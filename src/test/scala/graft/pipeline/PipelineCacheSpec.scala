@@ -6,7 +6,7 @@ import scala.util.Random
 
 /** Cache hygiene of the 01→02 run on in-repo synthetic transactions: what
   * the run persists for its own passes is released once the tiles table is
-  * written. */
+  * written, and the lazy run (no tiles table) persists nothing for them. */
 class PipelineCacheSpec extends SparkSpec {
 
   private lazy val tx = {
@@ -38,6 +38,24 @@ class PipelineCacheSpec extends SparkSpec {
     val result = GeoFraudPipeline.run(spark, tx, epsilon = 100.0, minPts = 3,
       tilePrecision = 10, tileLayers = 1, tilesOut = Some(dir))
     assert(result.tiles.count() > 0)
+    val added = persistentRdds -- before.keySet
+    assert(added.size == modelCaches.size,
+      s"the run left ${added.size} caches, its model holds ${modelCaches.size}: " +
+        added.values.mkString("; "))
+  }
+
+  test("run without a tiles table leaves cached only what its fitted model holds") {
+    val beforeFit = persistentRdds
+    new GeoscanPersonalized().setGroupedCol("user").setEpsilon(100.0).setMinPts(3).fit(tx)
+    val modelCaches = persistentRdds.keySet -- beforeFit.keySet
+    assert(modelCaches.size == 1)
+
+    val before = persistentRdds
+    val result = GeoFraudPipeline.run(spark, tx, epsilon = 100.0, minPts = 3,
+      tilePrecision = 10, tileLayers = 1)
+    // the lazy result, consumed: its TF-IDF reads nothing cached
+    assert(result.tiles.count() > 0)
+    result.anomalies.count()
     val added = persistentRdds -- before.keySet
     assert(added.size == modelCaches.size,
       s"the run left ${added.size} caches, its model holds ${modelCaches.size}: " +

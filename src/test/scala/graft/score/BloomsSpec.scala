@@ -35,11 +35,14 @@ class BloomsSpec extends SparkSpec {
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
+  /** A user with tiles, picked once: `head` of the unordered tiles frame
+    * may pick another user on another evaluation. */
+  private lazy val known = result.tiles.select("user").head.getString(0)
+
   /** Edge requests: a stranger, a null user, and a known user with a null
     * latitude, a null longitude and a tile the user never visited. */
   private def edgeProbe = {
     import spark.implicits._
-    val known = result.tiles.select("user").head.getString(0)
     Seq(("stranger", Some(40.72), Some(-73.98)),
       (null, Some(40.72), Some(-73.98)),
       (known, Option.empty[Double], Some(-73.98)),
