@@ -13,14 +13,8 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions) // AntiJoinRewrite + geo_cell live in driver runs
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Bench.cpus(4)
+    val spark = session(cpus)
     // ---- box-idle gate (r13 verdict): two rounds running, the committed
     // artifact was the round's dirtiest run — a bench launched while the
     // box still churns (the driver benches right after `sbt test`)
@@ -296,20 +290,8 @@ object Bench {
       if (lapRebuilt > 0) System.err.println(
         s"[bench] cache_rebuilt: $name re-materialized $lapRebuilt evicted " +
           "session-cache rdd(s) inside its timed lap — its wall carries the rebuild")
-      // listener events post asynchronously — wait for QUIESCENCE (size
-      // stable across a poll gap), not merely for the first record: multi-
-      // action queries (staged writes, cache builds, then the count) would
-      // otherwise leak their later records into the next query's metrics.
-      // The timing above is already captured; this costs bench wall only.
-      val deadline = System.currentTimeMillis() + 400
-      var last = -1
-      var cur = ml.snapshot().size
-      while ((cur != last || cur == n0) && System.currentTimeMillis() < deadline) {
-        last = cur
-        Thread.sleep(30)
-        cur = ml.snapshot().size
-      }
-      val recs = ml.snapshot().drop(n0)
+      // the timing above is already captured; this costs bench wall only
+      val recs = quiescentRecords(ml, n0)
       val r1 = rl.totals()
       (name, if (ok) sec else -1.0, ok,
         (recs.size, recs.map(_.nFileScans).sum, recs.flatMap(_.outputRows).sum),
@@ -445,17 +427,57 @@ object Bench {
     spark.stop()
   }
 
+  /** The session the timed laps run in, with the graft extensions
+    * (AntiJoinRewrite and geo_cell live in every timed run). */
+  private[graft] def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `SPARK_GRAFT_CPUS` as a positive core count, or `default`. */
+  private[graft] def cpus(default: Int, env: Map[String, String] = sys.env,
+                          warn: String => Unit = System.err.println): Int =
+    envOr("SPARK_GRAFT_CPUS", default, env, warn) { s =>
+      val n = s.toInt
+      require(n > 0)
+      n
+    }
+
+  /** The records `ml` gained after its first `n0`. Listener events post
+    * asynchronously: wait for quiescence (size stable across a 30 ms poll,
+    * at most 400 ms), not merely for the first record, or a multi-action
+    * query would leak its later records into the next query's. */
+  private[graft] def quiescentRecords(ml: graft.tracking.MetricsListener,
+                                      n0: Int): Seq[ml.Record] = {
+    val deadline = System.currentTimeMillis() + 400
+    var last = -1
+    var cur = ml.snapshot().size
+    while ((cur != last || cur == n0) && System.currentTimeMillis() < deadline) {
+      last = cur
+      Thread.sleep(30)
+      cur = ml.snapshot().size
+    }
+    ml.snapshot().drop(n0)
+  }
+
   /** The env variable `name` parsed by `parse`, or `default` when it is
-    * unset. A value that does not parse is reported through `warn`, naming
-    * the variable and the value, and falls back to `default` instead of
-    * failing the lap. */
+    * unset. A value that `parse` rejects (with an
+    * `IllegalArgumentException`, which `NumberFormatException` and
+    * `require` throw) is reported through `warn`, naming the variable and
+    * the value, and falls back to `default` instead of failing the lap. */
   private[graft] def envOr[T](name: String, default: T,
                               env: Map[String, String] = sys.env,
                               warn: String => Unit = System.err.println)
                              (parse: String => T): T =
     env.get(name).fold(default) { v =>
-      try parse(v.trim) catch { case _: NumberFormatException =>
-        warn(s"[bench] $name='$v' is not a number; using the default $default")
+      try parse(v.trim) catch { case _: IllegalArgumentException =>
+        warn(s"[bench] $name='$v' is not valid; using the default $default")
         default
       }
     }

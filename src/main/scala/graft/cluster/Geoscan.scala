@@ -117,6 +117,12 @@ private[cluster] object GeoscanIO {
   * labels and hulls there; above it connected components run O(log² n)
   * bounded rounds regardless of graph diameter, and only the partial-hull
   * rows are joined with their labels.
+  *
+  * The pid and forest `localCheckpoint`s are not released when the fit
+  * returns: under the cap nothing references them afterwards, and Spark's
+  * ContextCleaner reclaims their blocks after a driver GC (`RDD.unpersist`
+  * would release them at once, but logs a WARN about the truncated lineage
+  * on every fit).
   */
 class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with GeoscanParams {
   def this() = this(org.apache.spark.ml.util.Identifiable.randomUID("geoscan"))
@@ -158,7 +164,6 @@ class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with Geo
       .localCheckpoint(true)
     val maxAbsLatOpt = Option(latRange.get("maxAbsLat")).map(_.asInstanceOf[Double])
     if (maxAbsLatOpt.isEmpty) {
-      pts.unpersist() // the eager checkpoint is already pinned on this path
       val empty = spark.emptyDataset[(Long, Seq[(Double, Double)])]
         .toDF("cluster", "hull")
       return copyValues(new GeoscanModel(uid, empty)).setParent(this)
@@ -251,10 +256,9 @@ class Geoscan(override val uid: String) extends Estimator[GeoscanModel] with Geo
           .mapGroups { (c, it) => (c, Geoscan.mergeHulls(it.map(_._2))) }
           .toDF("cluster", "hull")
           .persist(StorageLevel.MEMORY_AND_DISK)
-        merged.count() // materialize before unpersisting inputs
+        merged.count() // materialize the model state
         merged
       }
-    pts.unpersist()
 
     val model = new GeoscanModel(uid, state)
     copyValues(model).setParent(this)

@@ -143,21 +143,26 @@ class GeoscanPersonalizedModel private[cluster] (
   override def transform(dataset: Dataset[_]): DataFrame = {
     val prec = $(tilePrecision)
     val (tilesRaw, nTiles) = tileCache(prec, $(tileLayers), $(tileGrid))
-    // unique join-side names so a caller-owned h3 column survives
-    val tiles = tilesRaw.select(col("user").as("__tile_user"),
-      col("cluster").as("__tile_cluster"), col("h3").as("__tile_h3"))
+    // uid-suffixed helper names, as in GeoscanModel.transform: a caller may
+    // own an h3 or __cell column, which a fixed name would overwrite and drop
+    val cellCol = s"__cell_$uid"
+    val tileUserCol = s"__tile_user_$uid"
+    val tileClusterCol = s"__tile_cluster_$uid"
+    val tileH3Col = s"__tile_h3_$uid"
+    val tiles = tilesRaw.select(col("user").as(tileUserCol),
+      col("cluster").as(tileClusterCol), col("h3").as(tileH3Col))
     val tilesSide = if (nTiles <= TileCache.BroadcastMaxRows) broadcast(tiles) else tiles
     val in = dataset.toDF()
     val base = if (in.columns.contains($(predictionCol))) in.drop($(predictionCol)) else in
     base
-      .withColumn("__cell", TileGrid.cellCol($(tileGrid),
+      .withColumn(cellCol, TileGrid.cellCol($(tileGrid),
         col($(latitudeCol)).cast(DoubleType), col($(longitudeCol)).cast(DoubleType), prec))
       .join(tilesSide,
-        col("__cell") === tilesSide("__tile_h3") &&
-          col($(groupedColM)).cast("string") === tilesSide("__tile_user"),
+        col(cellCol) === tilesSide(tileH3Col) &&
+          col($(groupedColM)).cast("string") === tilesSide(tileUserCol),
         "left_outer")
-      .drop("__tile_h3", "__cell", "__tile_user")
-      .withColumnRenamed("__tile_cluster", $(predictionCol))
+      .drop(tileH3Col, cellCol, tileUserCol)
+      .withColumnRenamed(tileClusterCol, $(predictionCol))
   }
 
   /** DataFrame[user, cluster] where `cluster` is a GeoJSON FeatureCollection

@@ -113,15 +113,20 @@ object Blooms {
     import org.apache.spark.sql.{Encoder, Encoders, Row}
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val nPoint = points.schema.length
-    val tr = trained.select(col(userCol).cast("string").as("__bf_user"), col("bloom").as("__bloom"))
+    // helper names no points column takes (resolution ignores case): the
+    // probe reads them by position, right after the points columns
+    val taken = points.columns.map(_.toLowerCase).toSet
+    def fresh(name: String) = Iterator.iterate(name)(_ + "_").find(n => !taken(n.toLowerCase)).get
+    val (cellCol, bfUserCol, bloomCol) = (fresh("__cell"), fresh("__bf_user"), fresh("__bloom"))
+    val tr = trained.select(col(userCol).cast("string").as(bfUserCol), col("bloom").as(bloomCol))
     // MERGE hint: a small trained side would otherwise broadcast-hash-join,
     // leaving probe rows in points order — the per-partition deserialization
     // memo below would thrash on every user switch (measured 4× slower).
     // Sort-merge clusters and sorts each partition by user, so each filter
     // deserializes once per partition.
     val joined = points
-      .withColumn("__cell", TileGrid.cellCol(grid, col(latCol), col(lngCol), precision))
-      .join(tr.hint("merge"), col(userCol).cast("string") === col("__bf_user"), "left_outer")
+      .withColumn(cellCol, TileGrid.cellCol(grid, col(latCol), col(lngCol), precision))
+      .join(tr.hint("merge"), col(userCol).cast("string") === col(bfUserCol), "left_outer")
     implicit val enc: Encoder[Row] = Encoders.row(
       StructType(points.schema.fields :+ StructField("anomaly", IntegerType, nullable = false)))
     joined.mapPartitions { it =>

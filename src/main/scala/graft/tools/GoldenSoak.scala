@@ -42,7 +42,7 @@ object GoldenSoak {
 
   def main(args: Array[String]): Unit = {
     val multipliers = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 10, 100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.Bench.cpus(32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)

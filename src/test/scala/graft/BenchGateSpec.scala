@@ -64,5 +64,14 @@ class BenchGateSpec extends AnyFunSuite {
     assert(warned.size == 3)
     assert(warned(0).contains("SPARK_GRAFT_DIRTY_LOAD") && warned(0).contains("'high'"))
     assert(warned(1).contains("SPARK_GRAFT_IDLE_WAIT_S") && warned(1).contains("'1.5'"))
+    // SPARK_GRAFT_CPUS must be a positive Int; each main keeps its default
+    def cpus(env: Map[String, String]) = Bench.cpus(32, env, warned += _)
+    assert(cpus(Map.empty) == 32 && cpus(Map("SPARK_GRAFT_CPUS" -> "8")) == 8)
+    assert(warned.size == 3)
+    Seq("0", "-2", "x").foreach(v => assert(cpus(Map("SPARK_GRAFT_CPUS" -> v)) == 32))
+    assert(warned.size == 6)
+    warned.drop(3).zip(Seq("'0'", "'-2'", "'x'")).foreach { case (w, v) =>
+      assert(w.contains("SPARK_GRAFT_CPUS") && w.contains(v) && w.contains("is not valid"))
+    }
   }
 }

@@ -358,14 +358,22 @@ class GeoscanSpec extends SparkSpec {
     import spark.implicits._
     val df = twoBlobs.toDF("latitude", "longitude")
       .withColumn("h3", lit("CALLER_OWNED"))
+      .withColumn("__cell", lit("CALLER_CELL"))
       .withColumn("cluster", lit(-99L))
+      .withColumn("user", lit("u"))
     val model = new Geoscan().setEpsilon(150).setMinPts(3).fit(df)
-    val out = model.setTilePrecision(11).setTileLayers(1).transform(df)
-    assert(out.columns.count(_ == "h3") == 1)
-    assert(out.select("h3").distinct().head.getString(0) == "CALLER_OWNED")
-    assert(out.columns.count(_ == "cluster") == 1)
-    // the stale -99 label is gone: labels are NULL or real cluster ids
-    assert(out.filter($"cluster" === -99L).count() == 0)
+    val pers = new GeoscanPersonalized().setGroupedCol("user").setEpsilon(150).setMinPts(3).fit(df)
+    for (out <- Seq(model.setTilePrecision(11).setTileLayers(1).transform(df),
+                    pers.setTilePrecision(11).setTileLayers(1).transform(df))) {
+      assert(out.columns.count(_ == "h3") == 1)
+      assert(out.select("h3").distinct().head.getString(0) == "CALLER_OWNED")
+      assert(out.columns.count(_ == "__cell") == 1)
+      assert(out.select("__cell").distinct().head.getString(0) == "CALLER_CELL")
+      assert(out.columns.count(_ == "cluster") == 1)
+      // the stale -99 label is gone: labels are NULL or real cluster ids
+      assert(out.filter($"cluster" === -99L).count() == 0)
+      assert(out.filter($"cluster".isNotNull).count() > 0)
+    }
   }
 
   test("sampleMaxPerCell caps dense cells deterministically") {

@@ -100,6 +100,15 @@ class BloomsSpec extends SparkSpec {
     assert(sameRows(viaMap, served.select(scoredCols: _*)))
   }
 
+  test("scoreByJoin keeps caller columns that carry its helper names") {
+    val owned = tx.withColumn("__cell", lit("CALLER_CELL")).withColumn("__BLOOM", lit(7))
+    val viaJoin = Blooms.scoreByJoin(owned, trained, precision = 10)
+    assert(viaJoin.schema.fieldNames.toSeq == owned.schema.fieldNames.toSeq :+ "anomaly")
+    assert(viaJoin.where(col("__cell") =!= "CALLER_CELL" || col("__BLOOM") =!= 7).isEmpty)
+    val viaMap = Blooms.score(tx, Blooms.toMap(trained), precision = 10)
+    assert(sameRows(viaMap.select(scoredCols: _*), viaJoin.select(scoredCols: _*)))
+  }
+
   test("null and unknown users and null coordinates are anomalous on every path") {
     val probe = edgeProbe
     val blooms = Blooms.toMap(trained)
